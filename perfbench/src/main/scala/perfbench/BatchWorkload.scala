@@ -82,20 +82,15 @@ object BatchWorkload {
   def run(p: Params, tr: Trace, res: Result): Unit = {
     val names = lines(p.workload)
     val r = new Runner(p, tr, res)
-    // set-up, three times: a fresh session, the seeded lap orders, and
-    // one probe line
+    // set-up: a fresh session, the seeded lap orders, and one probe line
     var spark: SparkSession = null
     var orders: Seq[Seq[String]] = Nil
-    val setups = (0 until 3).map { i =>
-      val t0 = System.nanoTime()
+    Setup.repeat(p, res) { _ =>
       spark = Sessions.fresh(p.cores, p.work)
       tr.attach(spark.sparkContext)
       orders = (0 until 64).map(l => order(names, p.seed, l))
       r.line(spark, p.data, names.head)
-      val s = (System.nanoTime() - t0) / 1e9
-      if (i == 0) (System.currentTimeMillis() - Clock.jvmStartMs) / 1e3 else s
     }
-    res.put("setup_s", Stats.median(setups), "s", setups.size)
 
     // Timed laps start right after set-up: the first lap pays for JIT
     // and for building any per-table artifact, as a fresh job does.
@@ -110,25 +105,26 @@ object BatchWorkload {
       while (done.isEmpty || System.nanoTime() < deadline) done += laps.next()
       val lapMs = done.map(_._1).toSeq
       val lineMs = done.flatMap(_._2).toSeq
-      res.put("lap_s", Stats.median(lapMs) / 1e3, "s", lapMs.size)
-      res.put("line_p50_s", Stats.quantile(lineMs, 0.5) / 1e3, "s", lineMs.size)
-      res.put("line_p90_s", Stats.quantile(lineMs, 0.9) / 1e3, "s", lineMs.size)
       res.put("pass_s", Stats.median(lapMs) / 1e3, "s", lapMs.size)
       res.put("op_p50_ms", Stats.quantile(lineMs, 0.5), "ms", lineMs.size)
       res.put("op_p90_ms", Stats.quantile(lineMs, 0.9), "ms", lineMs.size)
     } else traced(p, tr, res, r, spark, orders)
   }
 
-  /** Traced run: an untraced lap, a traced lap (the layer numbers and
-    * the tracing overhead), then one untraced lap on `local[1]`. */
+  /** Traced run: an untraced lap as the untraced run makes it (cold:
+    * `op_p50_ms`, `op_p90_ms`), a traced lap (the layer numbers), then
+    * the same untraced lap on `local[1]`. A second untraced lap, to
+    * divide the ratios by a warm lap, would not fit the time limit of
+    * a run, so `trace.overhead` and `exec.speedup_vs_1core` divide by
+    * the cold lap and read low. */
   private def traced(p: Params, tr: Trace, res: Result, r: Runner, spark0: SparkSession,
       orders: Seq[Seq[String]]): Unit = {
-    // no warm-up lap (a traced run must end within its time limit): the
-    // untraced lap is the colder one, so `trace.overhead` reads low
     tr.enabled = false
-    val (plainMs, _) = r.lap(spark0, p.data, orders(1))
+    val (plainMs, coldLines) = r.lap(spark0, p.data, orders(0))
+    res.put("op_p50_ms", Stats.quantile(coldLines, 0.5), "ms", coldLines.size)
+    res.put("op_p90_ms", Stats.quantile(coldLines, 0.9), "ms", coldLines.size)
     tr.enabled = true
-    val (tracedMs, _) = r.lap(spark0, p.data, orders(2))
+    val (tracedMs, _) = r.lap(spark0, p.data, orders(1))
     Heap.sample()
     tr.settle()
     val lapSpan = tr.allSpans.filter(_.layer == "lap").last
@@ -144,10 +140,7 @@ object BatchWorkload {
     }
     val jobs = tr.jobsOf(all)
     res.put("exec.jobs", jobs.size.toDouble, "count")
-    Trace.execTotals(tr.stagesOf(jobs)).foreach { case (k, v) =>
-      res.put(k, v, if (k.endsWith("_ms")) "ms" else if (k.endsWith("_bytes")) "bytes" else "count")
-    }
-    res.put("exec.task_skew", res.metrics("exec.task_skew").value, "ratio")
+    Trace.putTotals(res, tr.stagesOf(jobs))
     val lineSpans = all.filter(_.layer == "line")
     res.put("exec.driver_gap_ms", lineSpans.map(tr.driverGapMs).sum, "ms", lineSpans.size)
     res.put("exec.core_util", res.metrics("exec.task_run_ms").value / (tracedMs * p.cores), "ratio")
@@ -157,8 +150,7 @@ object BatchWorkload {
     tr.enabled = false
     val one = Sessions.fresh(1, p.work)
     tr.attach(one.sparkContext)
-    val (oneMs, _) = r.lap(one, p.data, orders(1))
+    val (oneMs, _) = r.lap(one, p.data, orders(0))
     res.put("exec.speedup_vs_1core", oneMs / plainMs, "ratio")
-    res.put("lap_s", plainMs / 1e3, "s")
   }
 }

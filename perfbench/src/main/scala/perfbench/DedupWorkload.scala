@@ -19,22 +19,13 @@ object DedupWorkload {
   val Batches = 10
 
   def run(p: Params, tr: Trace, res: Result): Unit = {
-    val perBatch = if (p.small) 20 else 40
     var spark: SparkSession = null
     var batches: Seq[Seq[(Long, String)]] = Nil
-    val setups = (0 until 3).map { i =>
-      val t0 = System.nanoTime()
+    Setup.repeat(p, res) { _ =>
       spark = Sessions.fresh(p.cores, p.work)
       tr.attach(spark.sparkContext)
-      val docs = spark.read.parquet(s"${p.data}/documents.parquet")
-        .select(col("doc_id"), col("text")).collect().map(r => (r.getLong(0), r.getString(1)))
-        .sortBy(_._1)
-      val rnd = new scala.util.Random(p.seed)
-      batches = rnd.shuffle(docs.toSeq).take(perBatch * Batches).grouped(perBatch).toSeq
-      val s = (System.nanoTime() - t0) / 1e9
-      if (i == 0) (System.currentTimeMillis() - Clock.jvmStartMs) / 1e3 else s
+      batches = sample(spark, p, if (p.small) 20 else 40, Batches)
     }
-    res.put("setup_s", Stats.median(setups), "s", setups.size)
     // warm-up: three small batches, one of them compacting, into a
     // throw-away store
     val w0 = System.nanoTime()
@@ -46,13 +37,64 @@ object DedupWorkload {
 
     val root = s"${p.work}/dedup-${p.seed}"
     val t0 = System.nanoTime()
-    val times = batches.zipWithIndex.map { case (b, id) =>
+    val times = fold(spark, tr, res, batches, root, CompactEvery)
+    val passS = (System.nanoTime() - t0) / 1e9
+    Heap.sample()
+    check(spark, res, batches, root)
+
+    res.put("pass_s", passS, "s", times.size)
+    res.put("op_p50_ms", Stats.quantile(times, 0.5), "ms", times.size)
+    res.put("op_p90_ms", Stats.quantile(times, 0.9), "ms", times.size)
+    layers(tr, res, times, root, CompactEvery)
+    if (p.trace) {
+      val spans = tr.allSpans.filter(_.layer == "streaming.cm_batch")
+      val jobs = tr.jobsOf(spans)
+      res.put("exec.jobs", jobs.size.toDouble, "count")
+      Trace.putTotals(res, tr.stagesOf(jobs))
+      res.put("exec.driver_gap_ms", spans.map(tr.driverGapMs).sum, "ms", spans.size)
+      res.put("exec.core_util", res.metrics("exec.task_run_ms").value / (passS * 1000 * p.cores), "ratio")
+    }
+  }
+
+  /** The `streaming.cm_*` layer for the traced run of another workload,
+    * in its session: five batches of 12 documents, compacting every
+    * two, so the fold crosses two compactions. */
+  def layersOnly(p: Params, tr: Trace, res: Result, spark: SparkSession): Unit = {
+    val batches = sample(spark, p, 12, 5)
+    val root = s"${p.work}/dedup-layers-${p.seed}"
+    val times = fold(spark, tr, res, batches, root, 2)
+    check(spark, res, batches, root)
+    layers(tr, res, times, root, 2)
+  }
+
+  /** `batches` seeded batches of `perBatch` distinct documents. About a
+    * quarter of them come in near-duplicate pairs (a document and its
+    * copy plus one word, as `gen_data.py` makes them), so the clusters
+    * the fold must maintain are never empty; at random, a few hundred of
+    * 5000 documents would hold almost no pair. */
+  private def sample(spark: SparkSession, p: Params, perBatch: Int, batches: Int): Seq[Seq[(Long, String)]] = {
+    val docs = spark.read.parquet(s"${p.data}/documents.parquet")
+      .select(col("doc_id"), col("text")).collect().map(r => (r.getLong(0), r.getString(1)))
+      .sortBy(_._1).toSeq
+    val rnd = new scala.util.Random(p.seed)
+    val n = perBatch * batches
+    val byText = docs.groupBy(_._2)
+    val paired = rnd.shuffle(docs.filter(_._2.endsWith(" dup")))
+      .flatMap(d => byText.get(d._2.stripSuffix(" dup")).map(src => Seq(d, src.head)))
+      .take(n / 8).flatten.distinct
+    val chosen = (paired ++ rnd.shuffle(docs)).distinct.take(n)
+    rnd.shuffle(chosen).grouped(perBatch).toSeq
+  }
+
+  /** Folds every batch with `processBatch`; returns each batch's ms. */
+  private def fold(spark: SparkSession, tr: Trace, res: Result, batches: Seq[Seq[(Long, String)]],
+      root: String, compactEvery: Int): Seq[Double] =
+    batches.zipWithIndex.map { case (b, id) =>
       res.attempted += 1
       val df = frame(spark, b)
       val t = System.nanoTime()
       try tr.span("streaming.cm_batch", id.toString) {
-        ClusterMaintenance.processBatch(df, id.toLong, root, "doc_id", "text",
-          compactEvery = CompactEvery)
+        ClusterMaintenance.processBatch(df, id.toLong, root, "doc_id", "text", compactEvery = compactEvery)
       } catch {
         case e: Exception =>
           res.fail(s"batch $id: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
@@ -61,10 +103,10 @@ object DedupWorkload {
       System.err.println(f"perfbench: dedup batch $id ${b.size} docs $ms%.0f ms")
       ms
     }
-    val passS = (System.nanoTime() - t0) / 1e9
-    Heap.sample()
 
-    // correctness: the maintained clusters against the batch chain
+  /** The maintained clusters against the batch chain. */
+  private def check(spark: SparkSession, res: Result, batches: Seq[Seq[(Long, String)]],
+      root: String): Unit = {
     res.attempted += 1
     val got = clusterSet(ClusterMaintenance.loadClusters(spark, root))
     val all = frame(spark, batches.flatten)
@@ -75,15 +117,10 @@ object DedupWorkload {
     if (got != want || want.isEmpty)
       res.fail(s"clusters: ${got.size} maintained rows vs ${want.size} from the batch chain, " +
         s"${(got diff want).size + (want diff got).size} differ")
+  }
 
-    val docs = batches.map(_.size).sum
-    res.put("docs_per_s", docs / passS, "1/s", times.size)
-    res.put("pass_s", passS, "s", 1)
-    res.put("op_p50_ms", Stats.quantile(times, 0.5), "ms", times.size)
-    res.put("op_p90_ms", Stats.quantile(times, 0.9), "ms", times.size)
-
-    // ---- layers ------------------------------------------------------
-    val compacting = times.indices.filter(i => i > 0 && i % CompactEvery == 0)
+  private def layers(tr: Trace, res: Result, times: Seq[Double], root: String, compactEvery: Int): Unit = {
+    val compacting = times.indices.filter(i => i > 0 && i % compactEvery == 0)
     val firstCompact = compacting.headOption.getOrElse(times.size)
     val pre = times.indices.filter(i => i < firstCompact)
     val post = times.indices.filter(i => i > firstCompact && !compacting.contains(i))
@@ -92,20 +129,13 @@ object DedupWorkload {
     res.put("streaming.cm_batch_post_ms", med(post), "ms", post.size)
     res.put("streaming.cm_compact_batch_ms", med(compacting), "ms", compacting.size)
     res.put("streaming.cm_store_bytes", bytes(new java.io.File(root)).toDouble, "bytes")
-    if (p.trace) {
+    if (tr.enabled) {
       tr.settle()
       val spans = tr.allSpans.filter(_.layer == "streaming.cm_batch")
       val jobs = tr.jobsOf(spans)
       res.put("streaming.cm_jobs_per_batch", jobs.size.toDouble / math.max(1, spans.size), "count")
-      val tot = Trace.execTotals(tr.stagesOf(jobs))
-      res.put("streaming.cm_input_bytes_per_batch", tot("exec.input_bytes") / math.max(1, spans.size),
-        "bytes")
-      res.put("exec.jobs", jobs.size.toDouble, "count")
-      tot.foreach { case (k, v) =>
-        res.put(k, v, if (k.endsWith("_ms")) "ms" else if (k.endsWith("_bytes")) "bytes" else "count")
-      }
-      res.put("exec.driver_gap_ms", spans.map(tr.driverGapMs).sum, "ms", spans.size)
-      res.put("exec.core_util", tot("exec.task_run_ms") / (passS * 1000 * p.cores), "ratio")
+      res.put("streaming.cm_input_bytes_per_batch",
+        Trace.execTotals(tr.stagesOf(jobs))("exec.input_bytes") / math.max(1, spans.size), "bytes")
     }
   }
 

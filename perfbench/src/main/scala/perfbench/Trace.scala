@@ -196,6 +196,12 @@ final class Trace(initial: Boolean) {
 object Trace {
   val Key = "perfbench.span"
 
+  /** Puts every executor-side total of `st` into `res`. */
+  def putTotals(res: Result, st: Seq[StageRec]): Unit = execTotals(st).foreach { case (k, v) =>
+    res.put(k, v, if (k.endsWith("_ms")) "ms" else if (k.endsWith("_bytes")) "bytes"
+      else if (k == "exec.task_skew") "ratio" else "count")
+  }
+
   /** Executor-side totals over a set of stages. */
   def execTotals(st: Seq[StageRec]): Map[String, Double] = {
     val skews = st.filter(_.durations.size >= 2).map { s =>

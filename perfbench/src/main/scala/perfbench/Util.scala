@@ -75,12 +75,9 @@ object Heap {
 
 object Sessions {
   /** A fresh graft session on `local[cores]`, with every file Spark
-    * writes kept under `work`. Stops the previous one first. */
+    * writes kept under `work`. Stops any previous one first. */
   def fresh(cores: Int, work: String): SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    stopAll()
     val spark = graft.GraftSession.tuned(
       SparkSession.builder().master(s"local[$cores]").appName("perfbench"),
       shufflePartitions = cores)
@@ -95,6 +92,30 @@ object Sessions {
   def stopAll(): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.getDefaultSession.foreach(_.stop())
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+  }
+}
+
+/** Set-up, repeated: every set-up is timed the same way, from its own
+  * start until the workload could take its first timed operation, and
+  * `setup_s` is their median. Tearing the previous one down (`undo`)
+  * is not timed. `jvm_start_s` is reported apart: JVM start until the
+  * first set-up is done (class loading included). A traced run, whose
+  * result holds no `setup_s`, sets up once. */
+object Setup {
+  val Times = 9
+
+  def repeat(p: Params, res: Result, undo: () => Unit = () => Sessions.stopAll())(one: Int => Unit): Unit = {
+    val secs = (0 until (if (p.trace) 1 else Times)).map { i =>
+      if (i > 0) undo()
+      val t0 = System.nanoTime()
+      one(i)
+      if (i == 0) res.put("jvm_start_s", (System.currentTimeMillis() - Clock.jvmStartMs) / 1e3, "s")
+      (System.nanoTime() - t0) / 1e9
+    }
+    System.err.println(secs.map(s => f"$s%.2f").mkString("perfbench: set-ups ", " ", " s"))
+    res.put("setup_s", Stats.median(secs), "s", secs.size)
   }
 }
 
