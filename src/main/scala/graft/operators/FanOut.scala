@@ -31,17 +31,8 @@ object FanOut {
   /** Round-robin `df` up to the session's default parallelism iff its
     * planned partition count is lower; identity otherwise. Row values
     * are untouched — only placement changes (Spark's deterministic
-    * sort-before-repartition keeps retries consistent).
-    *
-    * Measurement escape hatch (round-18): `-Dgraft.fanout=off` makes
-    * widen the identity. The property is read at plan-construction
-    * time, so a paired same-JVM A/B (graft.tools.FanOutAB) can toggle
-    * the operator per iteration — the solo steady-state evidence the
-    * r17 verdict asked for on every kept site. Never set by Bench,
-    * Verify, or any production path; results are identical either way
-    * (widen only moves rows). */
+    * sort-before-repartition keeps retries consistent). */
   def widen(df: DataFrame): DataFrame = {
-    if (sys.props.get("graft.fanout").contains("off")) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -42,14 +41,9 @@ import graft.operators.Dedup
   *     components), never the whole table (see the cluster-store
   *     section below).
   *
-  * Replay-safe without a transaction log: a replayed micro-batch
-  * carries the same batchId (Structured Streaming's contract), reads
-  * only state STRICTLY OLDER than itself (`b < batchId`, version
-  * `v < batchId`) and overwrites exactly its own outputs — the same
-  * idempotence-by-versioning that [[graft.sinks.ExactlyOnce]] gets
-  * from its ledger. Doc ids are assumed unique across the stream
-  * (an exactly-once ingest upstream; re-posted CONTENT is fine — that
-  * is what the clusters detect).
+  * Replay-safe by the [[BatchVersioned]] replay rule. Doc ids are
+  * assumed unique across the stream (an exactly-once ingest upstream;
+  * re-posted CONTENT is fine — that is what the clusters detect).
   *
   * ==Cluster store: delta verdicts + two-key compaction==
   *
@@ -75,8 +69,7 @@ import graft.operators.Dedup
   *    to a bloom — row-groups holding none of the probed ids are
   *    skipped outright). Per-batch cluster-store input is
   *    O(batch keys × row-group granule), flat in history depth, and
-  *    the write is delta-sized. GC removes versions/deltas below the
-  *    PREVIOUS compact version ([[BatchVersioned.gcBelowPrev]]).
+  *    the write is delta-sized.
   *
   * The member lookup's touched-label filter is EXACT without
   * resolving versions first: labels are component minima, a merge
@@ -101,7 +94,7 @@ import graft.operators.Dedup
   */
 object ClusterMaintenance {
 
-  import BatchVersioned.{emptyDf, readBefore, versions}
+  import BatchVersioned.{emptyDf, writeSorted}
 
   /** v1/v2 postings guard (see ON-DISK FORMAT): fail loudly instead of
     * silently losing the cross-batch pairs of NULL-`n` rows. A FILTER
@@ -118,215 +111,36 @@ object ClusterMaintenance {
         "before resuming (ClusterMaintenance ON-DISK FORMAT v2)"))))
   }
 
-  // ---- postings compaction -----------------------------------------------
-  // Without it, every micro-batch's cross-batch lookup re-scanned the
-  // ENTIRE postings history (all prior b= delta dirs) — per-batch input
-  // linear in corpus history, the one scale-killer at 100 TB streamed
-  // ingest. Every `compactEvery` batches the history is rewritten ONCE
-  // as a GLOBALLY SH-SORTED table cut into ~`compactTargetRows`-row
-  // files (file == row-group at these sizes, so row-group min/max
-  // stats are disjoint contiguous sh ranges). The per-batch lookup
-  // then pushes the batch's distinct sh set into the parquet scan
-  // (native set-based In-filter — Spark pushes it whenever the set is
-  // LARGER than pushdown.inFilterThreshold), so only
-  // row-groups whose range CONTAINS a probed key are read: per-batch
-  // input from deep history is O(batch keys × file granule), flat in
-  // history depth, while the un-compacted tail stays bounded by
-  // compactEvery × batch. The compaction rewrite itself is sequential
-  // columnar I/O amortized over compactEvery batches (a leveled/LSM
-  // scheme that merges deltas into only the affected files is the
-  // production extension; one level keeps replay reasoning simple).
+  /** Postings by arrival batch (`postings/b=<batch>`). Without
+    * compaction every micro-batch's cross-batch lookup re-scanned the
+    * ENTIRE postings history; the sh-sorted, sh-bloomed compact version
+    * lets the per-batch lookup push the batch's distinct sh set into the
+    * scan, so input from deep history is O(batch keys × row group),
+    * flat in history depth. */
+  private[graft] def postings(root: String) = BatchVersioned.Store(
+    s"$root/postings_compact", s"$root/postings", "b", "id BIGINT, sh BIGINT, n BIGINT",
+    guard = requireN)
 
-  /** COMMITTED compacted-postings versions under root, ascending. */
-  private def compactVersions(spark: SparkSession, root: String): Seq[(Long, String)] =
-    versions(spark, s"$root/postings_compact")
+  /** Cluster deltas (`clusters/v=<batch>`), latest per doc; compact
+    * layout in the class doc's cluster-store section. */
+  private[graft] def clusters(root: String) = BatchVersioned.Store(
+    s"$root/clusters_compact", s"$root/clusters", "v", "doc_id BIGINT, cluster_id BIGINT",
+    key = Some("doc_id"))
 
-  /** Rewrite postings history older than `batchId` (prior compact +
-    * delta dirs) as one sh-sorted compact version, then garbage-
-    * collect state that no possible replay can read (versions/deltas
-    * below the PREVIOUS compact version: batches before `batchId` are
-    * committed by the time `batchId` runs, and a replay of `batchId`
-    * itself re-runs this compaction from the previous version, which
-    * is kept). Idempotent under replay: same inputs, same overwrite.
-    * `bloomNdv` sizes the per-row-group sh bloom (0 = assume one row
-    * group per file, i.e. min(rows, targetRows)); pass the expected
-    * rows-per-row-group when parquet.block.size is tuned smaller. */
+  /** Compact both stores at batch `batchId`. `bloomNdv` sizes the
+    * per-row-group blooms ([[BatchVersioned.writeSorted]]). */
   private[graft] def compact(spark: SparkSession, root: String, batchId: Long,
       targetRows: Long, bloomNdv: Long = 0L): Unit = {
-    val prev = compactVersions(spark, root).filter(_._1 < batchId).lastOption
-    val deltaLo = prev.map(_._1).getOrElse(Long.MinValue)
-    val deltas = requireN(
-      readBefore(spark, s"$root/postings", "id BIGINT, sh BIGINT, n BIGINT, b BIGINT", batchId))
-      .filter(col("b") >= deltaLo)
-      .select(col("id"), col("sh"), col("n"))
-    val all = prev match {
-      case Some((_, d)) => spark.read.parquet(d).select(col("id"), col("sh"), col("n")).unionByName(deltas)
-      case None => deltas
-    }
-    val rows = all.count()
-    if (rows > 0) {
-      val nFiles = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-      // sorted by sh for tight row-group stats, PLUS a bloom filter on
-      // sh per row group: with uniformly-hashed keys the sorted ranges
-      // TILE the key space, so [min,max] stats alone cannot reject a
-      // probed key that is absent from history (it always lands inside
-      // some row-group's range) — and absent keys are the common case
-      // for a fresh micro-batch. The bloom rejects those row-groups
-      // outright; present keys read exactly their granule. ndv is
-      // per-row-group cardinality (≤ file rows), so bloom space stays
-      // proportional, ~1.2 bytes/row
-      all.repartitionByRange(nFiles, col("sh"))
-        .sortWithinPartitions(col("sh"))
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#sh", "true")
-        .option("parquet.bloom.filter.expected.ndv#sh",
-          (if (bloomNdv > 0) bloomNdv else math.min(rows, targetRows)).toString)
-        // fpp must be << 1/batch-keys: a row group passes if ANY of the
-        // K probed keys false-positives, so per-key fpp compounds K
-        // times — at the default 1% every row group would pass a
-        // 2000-key probe and the false-positive floor grows linearly
-        // with history again. 1e-6 costs ~2x bloom bits (~3B/row)
-        .option("parquet.bloom.filter.fpp#sh", "0.000001")
-        .parquet(s"$root/postings_compact/v=$batchId")
-      // GC: only after the new version committed
-      BatchVersioned.gcBelowPrev(spark, s"$root/postings_compact", s"$root/postings", "b", prev)
-    }
-  }
-
-  /** Postings visible to batch `batchId`: the newest committed compact
-    * version below it plus the delta dirs after that version. When the
-    * batch's distinct shingle set is small enough to collect
-    * (`pushKeys`), it is pushed into the compact scan as a parquet
-    * In-filter — with sh-sorted files this prunes to the row-groups
-    * actually containing probed keys. Correctness never depends on the
-    * pushdown (the caller still joins/semi-joins on sh); it only cuts
-    * input bytes. */
-  private[graft] def postingsBefore(spark: SparkSession, root: String, batchId: Long,
-      pushKeys: Option[Array[Long]]): DataFrame = {
-    // <= batchId: the compacting batch reads its OWN committed version
-    // (v=batchId holds exactly the deltas b < batchId, written
-    // deterministically from strictly-older state, so a replayed batch
-    // reads identical rows either way — this leg just reads them
-    // pruned instead of as raw deltas)
-    val compactOpt = compactVersions(spark, root).filter(_._1 <= batchId).lastOption
-    val deltaLo = compactOpt.map(_._1).getOrElse(Long.MinValue)
-    val deltas = requireN(
-      readBefore(spark, s"$root/postings", "id BIGINT, sh BIGINT, n BIGINT, b BIGINT", batchId))
-      .filter(col("b") >= deltaLo)
-      .select(col("id"), col("sh"), col("n"))
-    compactOpt match {
-      case Some((_, d)) =>
-        val base = spark.read.parquet(d).select(col("id"), col("sh"), col("n"))
-        val pruned = pushKeys match {
-          case Some(keys) => base.filter(col("sh").isInCollection(keys.toSeq))
-          case None => base
-        }
-        pruned.unionByName(deltas)
-      case None => deltas
-    }
-  }
-
-  // ---- cluster store (delta verdicts + two-key compaction) ----------------
-
-  private def clusterCompactVersions(spark: SparkSession, root: String): Seq[(Long, String)] =
-    versions(spark, s"$root/clusters_compact")
-
-  /** Latest row per doc among `parts` (later `ver` wins; the compact
-    * part rides at Long.MinValue — oldest by construction). */
-  private def latestPerDoc(parts: Seq[DataFrame]): DataFrame = {
-    val all = parts.reduce(_ unionByName _)
-    all.withColumn("rn",
-        row_number().over(Window.partitionBy(col("doc_id")).orderBy(col("ver").desc)))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("cluster_id"))
-  }
-
-  /** Cluster-store parts visible under `verUpper` (None = everything
-    * committed): newest compact ≤ bound + delta tail, each carrying
-    * `ver`. `pushDoc`/`pushCid` prune the compact scan via its doc_id /
-    * cluster_id blooms — correctness never depends on the pushdown. */
-  private def clusterParts(spark: SparkSession, root: String, verUpper: Option[Long],
-      pushDoc: Option[Array[Long]], pushCid: Option[Array[Long]]): Seq[DataFrame] = {
-    val compactOpt = clusterCompactVersions(spark, root)
-      .filter(v => verUpper.forall(v._1 <= _)).lastOption
-    val lo = compactOpt.map(_._1).getOrElse(Long.MinValue)
-    val deltaDirs = versions(spark, s"$root/clusters")
-      .filter { case (v, _) => v >= lo && verUpper.forall(v < _) }.map(_._2)
-    val compactPart = compactOpt.map { case (_, d) =>
-      val base = spark.read.parquet(d)
-      val p1 = pushDoc match {
-        case Some(keys) => base.filter(col("doc_id").isInCollection(keys.toSeq))
-        case None => base
-      }
-      val p2 = pushCid match {
-        case Some(keys) => p1.filter(col("cluster_id").isInCollection(keys.toSeq))
-        case None => p1
-      }
-      p2.select(col("doc_id"), col("cluster_id")).withColumn("ver", lit(Long.MinValue))
-    }.toSeq
-    val deltaPart =
-      if (deltaDirs.isEmpty) Seq.empty
-      else Seq(spark.read.option("basePath", s"$root/clusters").parquet(deltaDirs: _*)
-        .withColumnRenamed("v", "ver")
-        .select(col("doc_id"), col("cluster_id"), col("ver")))
-    compactPart ++ deltaPart
+    postings(root).compact(spark, batchId)(writeSorted(_, _, Seq("sh"), targetRows, bloomNdv))
+    clusters(root).compact(spark, batchId)(
+      writeSorted(_, _, Seq("cluster_id", "doc_id"), targetRows, bloomNdv))
   }
 
   /** Latest cluster state (consumers: split/keep-drop/rebalance jobs
-    * join against this exactly as against the batch artifact):
-    * latest-version-per-doc over newest-compact + delta tail. */
+    * join against this exactly as against the batch artifact). */
   def loadClusters(spark: SparkSession, root: String): DataFrame = {
-    val parts = clusterParts(spark, root, verUpper = None, pushDoc = None, pushCid = None)
-    if (parts.isEmpty) emptyDf(spark, "doc_id BIGINT, cluster_id BIGINT")
-    else latestPerDoc(parts)
-  }
-
-  /** Raw versioned cluster-store rows BEFORE `batchId` (replay
-    * safety), optionally bloom-pruned on either key. Callers restrict
-    * to their key set (semi-join — correctness never depends on the
-    * pushdown) BEFORE resolving [[latestPerDoc]], so the window runs
-    * over the looked-up rows, never the store. */
-  private[graft] def clusterRowsBefore(spark: SparkSession, root: String, batchId: Long,
-      pushDoc: Option[Array[Long]], pushCid: Option[Array[Long]]): DataFrame = {
-    val parts = clusterParts(spark, root, Some(batchId), pushDoc, pushCid)
-    if (parts.isEmpty) emptyDf(spark, "doc_id BIGINT, cluster_id BIGINT, ver BIGINT")
-    else parts.reduce(_ unionByName _)
-  }
-
-  /** Resolve cluster history older than `batchId` into one compact
-    * version sorted by (cluster_id, doc_id) with blooms on BOTH keys
-    * (member lookups ride the sort + cluster_id bloom; endpoint
-    * lookups ride the doc_id bloom — a bloom needs no sort order),
-    * then GC below the PREVIOUS version (kept: a replayed compacting
-    * batch re-runs this from it — idempotent overwrite). */
-  private[graft] def compactClusters(spark: SparkSession, root: String, batchId: Long,
-      targetRows: Long, bloomNdv: Long = 0L): Unit = {
-    val prev = clusterCompactVersions(spark, root).filter(_._1 < batchId).lastOption
-    val parts = clusterParts(spark, root, Some(batchId), pushDoc = None, pushCid = None)
-    if (parts.nonEmpty) {
-      // persisted: the count (for file sizing) and the write would each
-      // re-run the full union + latest-per-doc window otherwise
-      val resolved = latestPerDoc(parts).persist()
-      try {
-        val rows = resolved.count()
-        if (rows > 0) {
-          val nFiles = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-          val ndv = (if (bloomNdv > 0) bloomNdv else math.min(rows, targetRows)).toString
-          resolved.repartitionByRange(nFiles, col("cluster_id"), col("doc_id"))
-            .sortWithinPartitions(col("cluster_id"), col("doc_id"))
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#cluster_id", "true")
-            .option("parquet.bloom.filter.expected.ndv#cluster_id", ndv)
-            .option("parquet.bloom.filter.fpp#cluster_id", "0.000001")
-            .option("parquet.bloom.filter.enabled#doc_id", "true")
-            .option("parquet.bloom.filter.expected.ndv#doc_id", ndv)
-            // fpp compounds across probed keys — see compact()
-            .option("parquet.bloom.filter.fpp#doc_id", "0.000001")
-            .parquet(s"$root/clusters_compact/v=$batchId")
-          BatchVersioned.gcBelowPrev(spark, s"$root/clusters_compact", s"$root/clusters", "v", prev)
-        }
-      } finally resolved.unpersist(blocking = false)
-    }
+    val cs = clusters(root)
+    cs.latest(cs.union(spark, None))
   }
 
   /** Fold this batch's pairs into the cluster store as a DELTA:
@@ -342,6 +156,7 @@ object ClusterMaintenance {
     * delta-store form). */
   private def foldPairsDelta(spark: SparkSession, root: String, batchId: Long,
       pairs: DataFrame, maxPushdownKeys: Int): Unit = {
+    val cs = clusters(root)
     val deltaDir = s"$root/clusters/v=$batchId"
     val pairsP = pairs.select(col("id_a"), col("id_b")).persist()
     try {
@@ -362,9 +177,9 @@ object ClusterMaintenance {
         // current rows for the endpoints only: semi-join BEFORE the
         // latest-per-doc window, so the window runs over endpoints ×
         // the few versions each appears in, never the store
-        val endpointClusters = latestPerDoc(Seq(
-            clusterRowsBefore(spark, root, batchId, pushDoc, pushCid = None)
-              .join(endIds, Seq("doc_id"), "left_semi")))
+        val endpointClusters = cs.latest(
+            cs.union(spark, Some(batchId), Seq("doc_id" -> pushDoc))
+              .join(endIds, Seq("doc_id"), "left_semi"))
           .persist()
         try {
           val joined = pairsP
@@ -403,9 +218,9 @@ object ClusterMaintenance {
               // label filter alone is exact (stale labels are never
               // current labels — see the class doc); the latest-per-doc
               // window over the matched handful is insurance
-              val members = latestPerDoc(Seq(
-                clusterRowsBefore(spark, root, batchId, pushDoc = None, pushCid = pushCid)
-                  .join(changed.select(col("mroot").as("cluster_id")), Seq("cluster_id"), "left_semi")))
+              val members = cs.latest(
+                cs.union(spark, Some(batchId), Seq("cluster_id" -> pushCid))
+                  .join(changed.select(col("mroot").as("cluster_id")), Seq("cluster_id"), "left_semi"))
               val relabeled = members
                 .join(changed, members("cluster_id") === changed("mroot"))
                 .select(members("doc_id"), col("merged").as("cluster_id"))
@@ -432,8 +247,7 @@ object ClusterMaintenance {
     * `docs.writeStream.foreachBatch(sink(root, ...)).start()`.
     *
     * `compactEvery` > 0 compacts the postings history AND the cluster
-    * store every that many batches (see [[compact]] /
-    * [[compactClusters]]); `maxPushdownKeys` bounds the per-batch key
+    * store every that many batches (see [[compact]]); `maxPushdownKeys` bounds the per-batch key
     * sets collected for scan pruning (a backfill batch with more
     * distinct keys than this reads the compact tables un-pruned —
     * at that batch/history ratio most row-groups contain matches
@@ -446,7 +260,6 @@ object ClusterMaintenance {
     val spark = batch.sparkSession
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       compact(spark, root, batchId, compactTargetRows)
-      compactClusters(spark, root, batchId, compactTargetRows)
     }
     val batchSh = Dedup.hashedShingleSets(
       batch.select(col(idCol).cast("long").as("id"), col(textCol).as("text")),
@@ -460,7 +273,7 @@ object ClusterMaintenance {
       val pushKeys =
         if (keyRows.length > maxPushdownKeys) None
         else Some(keyRows.map(_.getLong(0)))
-      val priorPostings = postingsBefore(spark, root, batchId, pushKeys)
+      val priorPostings = postings(root).union(spark, Some(batchId), Seq("sh" -> pushKeys))
       // freeze buckets whose running df crosses the cap as of this batch.
       // Only shingles PRESENT in the batch can join, so the history is
       // SEMI-JOINED to the batch's (small, broadcastable) shingle set

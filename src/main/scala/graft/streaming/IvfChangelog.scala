@@ -35,8 +35,7 @@ import graft.operators.IvfIndex
   *  - Compaction folds the complete history below a bound, resolves
   *    globally (latest per vec_id, tombstones dropped — nothing
   *    older remains to resurrect), rewrites one file per cell, and
-  *    GC's folded dirs under the [[BatchVersioned.gcBelowPrev]]
-  *    replay-safety rule shared with the other three compactors.
+  *    GC's folded dirs under the [[BatchVersioned]] replay rule.
   *
   * Multiple changes for one key in one micro-batch: pass `seqCol`
   * (the changelog's offset) — the net effect per key is computed
@@ -108,11 +107,9 @@ object IvfChangelog {
         // after-image outranks its own retraction — the same rule
         // probe-time resolution applies at equal ver. The window
         // runs over ONE micro-batch's rows, not the index.
-        val w = Window.partitionBy(col("vec_id"))
-          .orderBy(col(sc).desc, col("row_kind").isin("+I", "+U").desc)
-        batch.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1 && col("row_kind").isin("+I", "+U"))
-          .drop("__rn")
+        BatchVersioned.latestPerKey(batch, Seq("vec_id"),
+            col(sc).desc, col("row_kind").isin("+I", "+U").desc)
+          .filter(col("row_kind").isin("+I", "+U"))
       case None => batch.filter(col("row_kind").isin("+I", "+U"))
     }
     val liveRows = IvfIndex.assignCells(
@@ -158,27 +155,19 @@ object IvfChangelog {
     * model up on their next [[topK]] call ([[IvfIndex.load]] is a
     * plain per-call read).
     *
-    * Replay idempotence of the compact point itself: the skew
-    * re-measure only covers a crash BETWEEN the two commits. A crash
-    * AFTER both (but before the streaming checkpoint commits — the
-    * rest of processBatch sits in that window) would replay the
-    * compact point against the REWRITTEN layout, read LOW skew, and
-    * take the plain-compact branch — which assembles parts strictly
-    * below batchId (the pre-rotation version + retained b= dirs) and
-    * overwrites compact/v=batchId with OLD-model cell assignments
-    * while modelDir holds the new model: deleted keys stay probeable,
-    * moved keys go missing, silently. So a compact point whose
-    * v=batchId is ALREADY COMMITTED is skipped entirely (both
-    * branches) and only the persisted model is re-read — the replay
-    * re-ingests its batch rows (overwrite-idempotent b= dir) and
-    * nothing else. */
+    * A crash AFTER both commits (before the streaming checkpoint
+    * commits) replays the compact point against the REWRITTEN layout,
+    * where the plain compaction would rebuild v=batchId from the
+    * pre-rotation parts with OLD-model cells. The [[BatchVersioned]]
+    * replay rule keeps a committed v=batchId, so both branches are
+    * skipped and only the persisted model is re-read. */
   def sink(spark: SparkSession, root: String, modelDir: String,
       compactEvery: Int = 16, seqCol: Option[String] = None,
       rotateSkewAbove: Double = 0.0, rotateTrainIters: Int = 3): (DataFrame, Long) => Unit = {
     var model = IvfIndex.load(spark, modelDir)
     (batch, batchId) => {
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-        if (committed(spark, root, batchId)) {
+        if (index(root).committed(spark, batchId)) {
           // replayed compact point: the work (possibly a rotation)
           // committed before the crash — pick up the persisted model
           // (it is the one the at-rest layout was written under) and
@@ -188,7 +177,7 @@ object IvfChangelog {
         val (skew, live) =
           if (rotateSkewAbove > 0) occupancySkew(spark, root) else (0.0, 0L)
         if (rotateSkewAbove > 0 && skew > rotateSkewAbove && live > 0) {
-          val liveVecs = resolveAll(visible(spark, root)).select(col("vec_id"), col("v"))
+          val liveVecs = resolve(visible(spark, root), "vec_id").select(col("vec_id"), col("v"))
           val fresh = IvfIndex.train(liveVecs, model.cells, iters = rotateTrainIters,
             memoKey = s"ivf-rotate|$root|$batchId",
             sampleMod = IvfIndex.sampleMod(live, model.cells))
@@ -212,73 +201,38 @@ object IvfChangelog {
     }
   }
 
-  /** Is compact version v=`batchId` already committed (`_SUCCESS`
-    * present)? The compact-point replay fence for [[sink]] and
-    * [[compact]]. */
-  private def committed(spark: SparkSession, root: String, batchId: Long): Boolean =
-    BatchVersioned.versions(spark, s"$root/compact").exists(_._1 == batchId)
-
-  /** Explicit read schema: an EMPTY committed micro-batch (normal in
-    * a quiet stream) writes a dir with `_SUCCESS` but no data files,
-    * which schema inference cannot read — the layout is fixed by
-    * [[processBatch]], so spell it out. `cell` is the partition
-    * column (directory-derived). */
-  private val Schema = org.apache.spark.sql.types.StructType.fromDDL(
-    "vec_id BIGINT, v ARRAY<DOUBLE>, code BINARY, ver BIGINT, del BOOLEAN, cell INT")
-
-  /** Committed "newest compact version + arrival tail" assembly —
-    * [[IvfStream]]'s parts rule over the changelog row layout. */
-  private def parts(spark: SparkSession, root: String,
-      upper: Option[Long]): (Option[(Long, String)], Seq[DataFrame]) = {
-    val cv = BatchVersioned.versions(spark, s"$root/compact")
-      .filter(v => upper.forall(v._1 < _)).lastOption
-    val lo = cv.map(_._1).getOrElse(Long.MinValue)
-    val tail = BatchVersioned.versions(spark, root, prefix = "b")
-      .filter { case (b, _) => b >= lo && upper.forall(b < _) }.map(_._2)
-    val ps =
-      cv.map { case (_, d) =>
-        spark.read.schema(Schema).option("basePath", d).parquet(d).select(Cols.map(col): _*)
-      }.toSeq ++
-      (if (tail.isEmpty) Seq.empty
-       else Seq(spark.read.schema(Schema).option("basePath", root).parquet(tail: _*)
-         .select(Cols.map(col): _*)))
-    (cv, ps)
-  }
+  /** Arrival batches `root/b=<batch>/cell=<c>/` and compact versions
+    * `root/compact/v=<batch>/cell=<c>/` in the changelog row layout.
+    * Read with an explicit schema: an EMPTY committed micro-batch
+    * (normal in a quiet stream) writes a dir with `_SUCCESS` but no
+    * data files, which schema inference cannot read. */
+  private def index(root: String) = BatchVersioned.Store(
+    s"$root/compact", root, "b",
+    "vec_id BIGINT, v ARRAY<DOUBLE>, code BINARY, cell INT, ver BIGINT, del BOOLEAN",
+    schemaOnRead = true)
 
   private[graft] def visible(spark: SparkSession, root: String): DataFrame = {
-    val (_, ps) = parts(spark, root, upper = None)
+    val ps = index(root).parts(spark, None)
     require(ps.nonEmpty, s"no committed changelog batches under $root")
     ps.reduce(_ unionByName _)
   }
 
-  /** Global latest-per-key resolution — compaction's rule: newest
-    * `ver` wins, live beats tombstone at equal ver, deleted keys
-    * drop, tombstones themselves drop (the fold covers the COMPLETE
-    * history below its bound, so nothing older can resurrect). */
-  private def resolveAll(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("ver").desc, col("del").asc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && !col("del")).drop("__rn")
-  }
+  /** Changelog resolution per `keys`: newest `ver` wins, live beats
+    * tombstone at equal ver, deleted keys drop, tombstones themselves
+    * drop. Over `vec_id` alone it is compaction's rule (the fold covers
+    * the COMPLETE history below its bound, so nothing older can
+    * resurrect); probes resolve per (query_id, vec_id) candidate. */
+  private def resolve(df: DataFrame, keys: String*): DataFrame =
+    BatchVersioned.latestPerKey(df, keys, col("ver").desc, col("del").asc)
+      .filter(!col("del"))
 
   /** Rewrite history below `batchId` as compact version v=`batchId`
     * (resolved, one file per cell, `ver` retained so tail batches
-    * still outrank it), then GC below the previous version. A replay
-    * whose v=`batchId` is already committed is a no-op — the
-    * committed version may have been written by a ROTATION
-    * ([[compactRewrite]] under a new model), and re-compacting from
-    * the parts below it would clobber the new-model layout with
-    * old-model cell assignments. */
-  private[graft] def compact(spark: SparkSession, root: String, batchId: Long): Unit = {
-    if (committed(spark, root, batchId)) return
-    val (prev, ps) = parts(spark, root, upper = Some(batchId))
-    if (ps.nonEmpty) {
-      atRestWriter(resolveAll(ps.reduce(_ unionByName _))
-        .repartition(col("cell")))
-        .parquet(s"$root/compact/v=$batchId")
-      BatchVersioned.gcBelowPrev(spark, s"$root/compact", root, "b", prev)
+    * still outrank it) under the [[BatchVersioned]] replay rule. */
+  private[graft] def compact(spark: SparkSession, root: String, batchId: Long): Unit =
+    index(root).compact(spark, batchId) { (all, dir) =>
+      atRestWriter(resolve(all, "vec_id").repartition(col("cell"))).parquet(dir)
     }
-  }
 
   /** Cell-occupancy skew of the RESOLVED live set — the retrain
     * trigger. The frozen-model contract means sustained cell-moving
@@ -294,7 +248,7 @@ object IvfChangelog {
     * ~1.5–3; sustained drift pushes it an order of magnitude up).
     * Returns (maxOverMean, liveRows). */
   def occupancySkew(spark: SparkSession, root: String): (Double, Long) = {
-    val occ = resolveAll(visible(spark, root)).groupBy(col("cell")).count()
+    val occ = resolve(visible(spark, root), "vec_id").groupBy(col("cell")).count()
     val r = occ.agg(max(col("count")), avg(col("count")), sum(col("count"))).head
     // a fully purged index (every key tombstoned) is a legal state:
     // the aggregate row is all-NULL, not absent — report zero skew
@@ -317,17 +271,16 @@ object IvfChangelog {
     * into old-model cells that no longer match the at-rest layout. */
   def compactRewrite(spark: SparkSession, root: String, batchId: Long,
       model: IvfIndex.Model): Unit = {
-    val (prev, ps) = parts(spark, root, upper = Some(batchId))
-    require(ps.nonEmpty, s"no committed changelog batches under $root")
-    val resolved = resolveAll(ps.reduce(_ unionByName _))
-      .select(col("vec_id"), col("v"), col("ver"))
-    atRestWriter(IvfIndex.assignCells(resolved, model)
-      .withColumn("code", VectorExpressions.sq8Encode(col("v")))
-      .withColumn("del", lit(false))
-      .select(Cols.map(col): _*)
-      .repartition(col("cell")))
-      .parquet(s"$root/compact/v=$batchId")
-    BatchVersioned.gcBelowPrev(spark, s"$root/compact", root, "b", prev)
+    val wrote = index(root).rewrite(spark, batchId) { (all, dir) =>
+      val resolved = resolve(all, "vec_id").select(col("vec_id"), col("v"), col("ver"))
+      atRestWriter(IvfIndex.assignCells(resolved, model)
+        .withColumn("code", VectorExpressions.sq8Encode(col("v")))
+        .withColumn("del", lit(false))
+        .select(Cols.map(col): _*)
+        .repartition(col("cell")))
+        .parquet(dir)
+    }
+    require(wrote, s"no committed changelog batches under $root")
   }
 
   /** Probe the maintained index: DPP-pruned cell join FIRST (the
@@ -357,8 +310,6 @@ object IvfChangelog {
     // collect + broadcast join side) — localCheckpoint materializes
     // the query-vs-centroid scoring once instead of recomputing it
     val p = if (staticCellPushdown) p0.localCheckpoint(true) else p0
-    val wRes = Window.partitionBy(col("query_id"), col("vec_id"))
-      .orderBy(col("ver").desc, col("del").asc)
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     val vis =
@@ -368,10 +319,8 @@ object IvfChangelog {
         visible(spark, root).filter(col("cell").isin(cells.map(Integer.valueOf): _*))
       } else visible(spark, root)
     if (shortlistR <= 0) {
-      vis.join(broadcast(p), Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("__rn", row_number().over(wRes))
-        .filter(col("__rn") === 1 && !col("del"))
+      resolve(vis.join(broadcast(p), Seq("cell")).filter(col("vec_id") =!= col("query_id")),
+          "query_id", "vec_id")
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           nanvl(VectorFunctions.cosine(col("qv"), col("v")), lit(-2.0)).as("cos_sim"))
         .withColumn("rnk", row_number().over(wRank))
@@ -443,17 +392,13 @@ object IvfChangelog {
     * per-query top `shortlistR` as (query_id, neighbor_id, ver). */
   private[graft] def codedShortlist(vis: DataFrame, p: DataFrame,
       shortlistR: Int): DataFrame = {
-    val wRes = Window.partitionBy(col("query_id"), col("vec_id"))
-      .orderBy(col("ver").desc, col("del").asc)
     val wShort = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
     val qcoded = p.withColumn("qcode", VectorExpressions.sq8Encode(col("qv")))
       .select("query_id", "cell", "qcode")
-    vis.select("vec_id", "code", "cell", "ver", "del")
-      .join(broadcast(qcoded), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("__rn", row_number().over(wRes))
-      .filter(col("__rn") === 1 && !col("del"))
+    resolve(vis.select("vec_id", "code", "cell", "ver", "del")
+        .join(broadcast(qcoded), Seq("cell"))
+        .filter(col("vec_id") =!= col("query_id")), "query_id", "vec_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("ver"),
         // q59's guard: an all-zero code's 0/0 must sink, not float up
         nanvl(VectorExpressions.sq8Dot(col("qcode"), col("code")).cast("double") /
@@ -474,15 +419,11 @@ object IvfChangelog {
     * (the telemetry caps it at `recallSample` queries per batch). */
   def bruteTopK(spark: SparkSession, root: String, queries: DataFrame,
       k: Int): DataFrame = {
-    val wRes = Window.partitionBy(col("query_id"), col("vec_id"))
-      .orderBy(col("ver").desc, col("del").asc)
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    visible(spark, root)
-      .crossJoin(broadcast(queries.select(col("query_id"), col("qv"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("__rn", row_number().over(wRes))
-      .filter(col("__rn") === 1 && !col("del"))
+    resolve(visible(spark, root)
+        .crossJoin(broadcast(queries.select(col("query_id"), col("qv"))))
+        .filter(col("vec_id") =!= col("query_id")), "query_id", "vec_id")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         nanvl(VectorFunctions.cosine(col("qv"), col("v")), lit(-2.0)).as("cos_sim"))
       .withColumn("rnk", row_number().over(wRank))

@@ -88,62 +88,27 @@ object IvfStream {
   // The rewrite is sequential columnar I/O amortized over
   // compactEvery batches.
 
-  /** COMMITTED compact versions under root, ascending. */
-  private def compactVersions(spark: SparkSession, root: String): Seq[(Long, String)] =
-    BatchVersioned.versions(spark, s"$root/compact")
-
-  private val IndexCols = Seq("vec_id", "v", "code", "cell")
-
-  /** The one "compact version + delta tail" assembly both [[compact]]
-    * and [[visible]] read — bound differs, the column set and
-    * visibility rule must not: compaction rewrites EXACTLY what
-    * probes would read below its bound. Returns (previous-compact,
-    * parts). Both branches carry `cell` as a partition column, so
-    * probe-side cell pruning survives the union. */
-  private def parts(spark: SparkSession, root: String,
-      upper: Option[Long]): (Option[(Long, String)], Seq[DataFrame]) = {
-    val cv = compactVersions(spark, root)
-      .filter(v => upper.forall(v._1 < _)).lastOption
-    val lo = cv.map(_._1).getOrElse(Long.MinValue)
-    val tail = BatchVersioned.versions(spark, root, prefix = "b")
-      .filter { case (b, _) => b >= lo && upper.forall(b < _) }.map(_._2)
-    val ps =
-      cv.map { case (_, d) =>
-        spark.read.option("basePath", d).parquet(d).select(IndexCols.map(col): _*)
-      }.toSeq ++
-      (if (tail.isEmpty) Seq.empty
-       else Seq(spark.read.option("basePath", root).parquet(tail: _*)
-         .select(IndexCols.map(col): _*)))
-    (cv, ps)
-  }
+  /** Arrival batches `root/b=<batch>/cell=<c>/` and compact versions
+    * `root/compact/v=<batch>/cell=<c>/`; both carry `cell` as a
+    * partition column, so probe-side cell pruning survives the union. */
+  private def index(root: String) = BatchVersioned.Store(
+    s"$root/compact", root, "b", "vec_id BIGINT, v ARRAY<DOUBLE>, code BINARY, cell INT")
 
   /** Rewrite arrival batches older than `batchId` (plus the previous
-    * compact version) as compact version v=`batchId`, then GC what no
-    * possible replay can read — versions/batch dirs below the
-    * PREVIOUS compact version: batches < batchId are committed by the
-    * time batchId runs, and a replay of batchId re-runs this
-    * compaction from the previous version, which is kept. Idempotent
-    * under replay: same committed inputs, same overwrite (replayed
-    * ingest batches write identical rows — the frozen-model
-    * contract). */
-  private[graft] def compact(spark: SparkSession, root: String, batchId: Long): Unit = {
-    val (prev, ps) = parts(spark, root, upper = Some(batchId))
-    if (ps.nonEmpty) {
-      ps.reduce(_ unionByName _)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$root/compact/v=$batchId")
-      // GC only after the new version committed
-      BatchVersioned.gcBelowPrev(spark, s"$root/compact", root, "b", prev)
+    * compact version) as compact version v=`batchId` under the
+    * [[BatchVersioned]] replay rule (replayed ingest batches write
+    * identical rows — the frozen-model contract). */
+  private[graft] def compact(spark: SparkSession, root: String, batchId: Long): Unit =
+    index(root).compact(spark, batchId) { (all, dir) =>
+      all.repartition(col("cell")).write.mode("overwrite").partitionBy("cell").parquet(dir)
     }
-  }
 
   /** All index rows a probe may read: the newest committed compact
     * version plus committed arrival batches at-or-after it. A
     * replayed pre-compaction batch recommits rows already inside the
     * compact version and stays invisible here — no double counting. */
   private def visible(spark: SparkSession, root: String): DataFrame = {
-    val (_, ps) = parts(spark, root, upper = None)
+    val ps = index(root).parts(spark, None)
     require(ps.nonEmpty, s"no committed index batches under $root")
     ps.reduce(_ unionByName _)
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -39,8 +38,7 @@ import graft.operators.IvfIndex
   *     `corpus/b=<batch>`. [[loadVerdicts]] resolves
   *     latest-version-per-vector.
   *
-  * Replay-safe by the [[BatchVersioned]] contract: strictly-older
-  * reads, own-output overwrites, `_SUCCESS`-gated versions.
+  * Replay-safe by the [[BatchVersioned]] replay rule.
   *
   * ==Compaction — per-batch cost flat in stream history==
   *
@@ -62,13 +60,12 @@ import graft.operators.IvfIndex
   *  - the verdict history (previous compact + deltas) resolves
   *    latest-per-vector ONCE into a compact version sorted by vec_id
   *    with a bloom on vec_id; the per-batch retro-touch lookup pushes
-  *    the touched vec_id set the same way. Reads of both tables see
-  *    newest-compact + delta tail; GC removes what no replay can
-  *    read (below the PREVIOUS version, which is kept because a
-  *    replayed compacting batch re-runs its compaction from it).
+  *    the touched vec_id set the same way. Both tables are
+  *    [[BatchVersioned.Store]]s: reads see newest-compact + delta
+  *    tail, and compaction follows the store's replay rule.
   */
 object SemDeDupStream {
-  import BatchVersioned._
+  import BatchVersioned.writeSorted
 
   /** Packed bucket key (cell·2²⁰ + sub) — one sortable/bloomable
     * column for row-group pruning; subBits ≤ 20 by far (q53 uses
@@ -76,166 +73,35 @@ object SemDeDupStream {
   private[graft] def ck(cell: org.apache.spark.sql.Column, sub: org.apache.spark.sql.Column) =
     cell.cast("long") * lit(1L << 20) + sub
 
-  // ---- corpus side ---------------------------------------------------------
+  /** Per-cell corpus deltas (`corpus/b=<batch>`); the compact version
+    * is ck-sorted with a ck bloom, so the pair join prunes to the
+    * batch's buckets. */
+  private[graft] def corpus(root: String) = BatchVersioned.Store(
+    s"$root/corpus_compact", s"$root/corpus", "b", "vec_id BIGINT, cell INT, sub INT, v ARRAY<DOUBLE>")
 
-  private def corpusCompactVersions(spark: SparkSession, root: String): Seq[(Long, String)] =
-    versions(spark, s"$root/corpus_compact")
+  /** Verdict deltas (`verdicts/v=<batch>`), latest per vector; the
+    * compact version is vec_id-sorted with a vec_id bloom. */
+  private def verdicts(root: String) = BatchVersioned.Store(
+    s"$root/verdicts_compact", s"$root/verdicts", "v", "vec_id BIGINT, cell INT, sub INT, dup_of BIGINT",
+    key = Some("vec_id"))
 
-  /** Corpus rows visible to batch `batchId`: newest compact version at
-    * or below it (ck-pruned when the batch's bucket set is pushed)
-    * plus the delta tail. `<=` for the same replay reason as
-    * [[ClusterMaintenance.postingsBefore]]: v=batchId holds exactly
-    * the deltas b < batchId, written deterministically from
-    * strictly-older state. */
-  private[graft] def corpusBefore(spark: SparkSession, root: String, batchId: Long,
-      pushCk: Option[Array[Long]]): DataFrame = {
-    val compactOpt = corpusCompactVersions(spark, root).filter(_._1 <= batchId).lastOption
-    val deltaLo = compactOpt.map(_._1).getOrElse(Long.MinValue)
-    val deltas = readBefore(spark, s"$root/corpus",
-      "vec_id BIGINT, cell INT, sub INT, v ARRAY<DOUBLE>, b BIGINT", batchId)
-      .filter(col("b") >= deltaLo)
-      .select(col("vec_id"), col("cell"), col("sub"), col("v"))
-    compactOpt match {
-      case Some((_, d)) =>
-        val base = spark.read.parquet(d)
-        val pruned = pushCk match {
-          case Some(keys) => base.filter(col("ck").isInCollection(keys.toSeq))
-          case None => base
-        }
-        pruned.select(col("vec_id"), col("cell"), col("sub"), col("v")).unionByName(deltas)
-      case None => deltas
+  /** Compact both stores at batch `batchId`. `bloomNdv` sizes the
+    * corpus's per-row-group ck bloom ([[BatchVersioned.writeSorted]]). */
+  private[graft] def compact(spark: SparkSession, root: String, batchId: Long,
+      targetRows: Long, bloomNdv: Long = 0L): Unit = {
+    corpus(root).compact(spark, batchId) { (all, dir) =>
+      writeSorted(all.withColumn("ck", ck(col("cell"), col("sub"))), dir, Seq("ck"), targetRows, bloomNdv)
     }
-  }
-
-  /** Rewrite corpus history older than `batchId` as one ck-sorted
-    * compact version, then GC versions/deltas below the PREVIOUS
-    * compact version (kept: a replayed compacting batch re-runs this
-    * from it — idempotent overwrite, identical rows). */
-  /** `bloomNdv` = expected distinct ck per row group when
-    * parquet.block.size is tuned small (0 = one row group per file,
-    * i.e. min(rows, targetRows)) — the [[ClusterMaintenance.compact]]
-    * convention. */
-  private[graft] def compactCorpus(spark: SparkSession, root: String, batchId: Long,
-      targetRows: Long = 4000000L, bloomNdv: Long = 0L): Unit = {
-    val prev = corpusCompactVersions(spark, root).filter(_._1 < batchId).lastOption
-    val deltaLo = prev.map(_._1).getOrElse(Long.MinValue)
-    val deltas = readBefore(spark, s"$root/corpus",
-      "vec_id BIGINT, cell INT, sub INT, v ARRAY<DOUBLE>, b BIGINT", batchId)
-      .filter(col("b") >= deltaLo)
-      .select(col("vec_id"), col("cell"), col("sub"), col("v"))
-    val all = (prev match {
-      case Some((_, d)) =>
-        spark.read.parquet(d).select(col("vec_id"), col("cell"), col("sub"), col("v"))
-          .unionByName(deltas)
-      case None => deltas
-    }).withColumn("ck", ck(col("cell"), col("sub")))
-    val rows = all.count()
-    if (rows > 0) {
-      val nFiles = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-      all.repartitionByRange(nFiles, col("ck"))
-        .sortWithinPartitions(col("ck"))
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#ck", "true")
-        .option("parquet.bloom.filter.expected.ndv#ck",
-          (if (bloomNdv > 0) bloomNdv else math.min(rows, targetRows)).toString)
-        // fpp must be << 1/batch-buckets (compounds across probed keys;
-        // see ClusterMaintenance.compact)
-        .option("parquet.bloom.filter.fpp#ck", "0.000001")
-        .parquet(s"$root/corpus_compact/v=$batchId")
-      gcBelowPrev(spark, s"$root/corpus_compact", s"$root/corpus", "b", prev)
-    }
-  }
-
-  // ---- verdict side --------------------------------------------------------
-
-  private def verdictCompactVersions(spark: SparkSession, root: String): Seq[(Long, String)] =
-    versions(spark, s"$root/verdicts_compact")
-
-  private val VerdictCols = Seq("vec_id", "cell", "sub", "dup_of")
-
-  /** Latest verdict per vector among `parts`, where later versions
-    * override earlier (`ver` column; the compact part rides at
-    * Long.MinValue — it is the OLDEST state by construction). */
-  private def latestPerKey(parts: Seq[DataFrame]): DataFrame = {
-    val all = parts.reduce(_ unionByName _)
-    all.withColumn("rn",
-        row_number().over(Window.partitionBy(col("vec_id")).orderBy(col("ver").desc)))
-      .filter(col("rn") === 1)
-      .select(VerdictCols.map(col): _*)
-  }
-
-  /** Verdict parts visible strictly according to `verUpper` (None =
-    * everything committed): newest compact ≤ bound + delta tail, each
-    * carrying `ver`. */
-  private def verdictParts(spark: SparkSession, root: String,
-      verUpper: Option[Long], pushIds: Option[Array[Long]]): Seq[DataFrame] = {
-    val compactOpt = verdictCompactVersions(spark, root)
-      .filter(v => verUpper.forall(v._1 <= _)).lastOption
-    val lo = compactOpt.map(_._1).getOrElse(Long.MinValue)
-    val deltaDirs = versions(spark, s"$root/verdicts")
-      .filter { case (v, _) => v >= lo && verUpper.forall(v < _) }.map(_._2)
-    val compactPart = compactOpt.map { case (_, d) =>
-      val base = spark.read.parquet(d)
-      val pruned = pushIds match {
-        case Some(keys) => base.filter(col("vec_id").isInCollection(keys.toSeq))
-        case None => base
-      }
-      pruned.select(VerdictCols.map(col): _*).withColumn("ver", lit(Long.MinValue))
-    }.toSeq
-    val deltaPart =
-      if (deltaDirs.isEmpty) Seq.empty
-      else Seq(spark.read.option("basePath", s"$root/verdicts").parquet(deltaDirs: _*)
-        .withColumnRenamed("v", "ver")
-        .select((VerdictCols.map(col) :+ col("ver")): _*))
-    compactPart ++ deltaPart
+    verdicts(root).compact(spark, batchId)(writeSorted(_, _, Seq("vec_id"), targetRows))
   }
 
   /** Latest committed verdict table: (vec_id, cell, keep, dup_of) —
     * the exact q53 schema, resolved latest-version-per-vector over
     * newest-compact + deltas. */
   def loadVerdicts(spark: SparkSession, root: String): DataFrame = {
-    val parts = verdictParts(spark, root, verUpper = None, pushIds = None)
-    if (parts.isEmpty)
-      emptyDf(spark, "vec_id BIGINT, cell INT, keep BOOLEAN, dup_of BIGINT")
-    else latestPerKey(parts)
+    val vs = verdicts(root)
+    vs.latest(vs.union(spark, None))
       .select(col("vec_id"), col("cell"), col("dup_of").isNull.as("keep"), col("dup_of"))
-  }
-
-  /** Latest verdict rows BEFORE `batchId` for the touched vec_ids
-    * (pushed into the compact scan's vec_id bloom when bounded). */
-  private def verdictsBefore(spark: SparkSession, root: String, batchId: Long,
-      pushIds: Option[Array[Long]]): DataFrame = {
-    val parts = verdictParts(spark, root, verUpper = Some(batchId), pushIds)
-    if (parts.isEmpty) emptyDf(spark, "vec_id BIGINT, cell INT, sub INT, dup_of BIGINT")
-    else latestPerKey(parts)
-  }
-
-  /** Resolve verdict history older than `batchId` into one
-    * vec_id-sorted compact version + GC (mirror of [[compactCorpus]]). */
-  private[graft] def compactVerdicts(spark: SparkSession, root: String, batchId: Long,
-      targetRows: Long = 4000000L): Unit = {
-    val prev = verdictCompactVersions(spark, root).filter(_._1 < batchId).lastOption
-    val parts = verdictParts(spark, root, verUpper = Some(batchId), pushIds = None)
-    if (parts.nonEmpty) {
-      // persisted: the count (for file sizing) and the write would
-      // otherwise each re-run the full compact+delta union AND its
-      // latest-per-key window shuffle over the whole history
-      val resolved = latestPerKey(parts).persist()
-      try {
-        val rows = resolved.count()
-        if (rows > 0) {
-          val nFiles = math.max(1L, (rows + targetRows - 1) / targetRows).toInt
-          resolved.repartitionByRange(nFiles, col("vec_id"))
-            .sortWithinPartitions(col("vec_id"))
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#vec_id", "true")
-            .option("parquet.bloom.filter.expected.ndv#vec_id", math.min(rows, targetRows).toString)
-            .option("parquet.bloom.filter.fpp#vec_id", "0.000001")
-            .parquet(s"$root/verdicts_compact/v=$batchId")
-          gcBelowPrev(spark, s"$root/verdicts_compact", s"$root/verdicts", "v", prev)
-        }
-      } finally resolved.unpersist(blocking = false)
-    }
   }
 
   // ---- per-batch pipeline --------------------------------------------------
@@ -261,8 +127,7 @@ object SemDeDupStream {
       maxPushdownKeys: Int): Unit = {
     val spark = batch.sparkSession
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      compactCorpus(spark, root, batchId, compactTargetRows)
-      compactVerdicts(spark, root, batchId, compactTargetRows)
+      compact(spark, root, batchId, compactTargetRows)
     }
     val assigned = IvfIndex.assignCells(batch.select(col("vec_id"), col("v")), model)
       .withColumn("sub", graft.queries.SimilarityQ.semdedupSubKey(col("v"), subBits))
@@ -276,7 +141,7 @@ object SemDeDupStream {
         .limit(maxPushdownKeys + 1).collect()
       val pushCk = if (ckRows.length > maxPushdownKeys) None
         else Some(ckRows.map(_.getLong(0)))
-      val prior = corpusBefore(spark, root, batchId, pushCk)
+      val prior = corpus(root).union(spark, Some(batchId), Seq("ck" -> pushCk))
       // cross pairs: both orientations matter (an old lower id drops a
       // new vector; a NEW lower id retro-drops an old one) — orient by
       // least/greatest so min(u) per w is well-defined
@@ -302,7 +167,8 @@ object SemDeDupStream {
         val wRows = minUp.select(col("w")).limit(maxPushdownKeys + 1).collect()
         val pushW = if (wRows.length > maxPushdownKeys) None
           else Some(wRows.map(_.getLong(0)))
-        val prev = verdictsBefore(spark, root, batchId, pushW)
+        val vs = verdicts(root)
+        val prev = vs.latest(vs.union(spark, Some(batchId), Seq("vec_id" -> pushW)))
         // merge: least() skips NULLs, so a touched verdict takes the
         // smaller of old and new. Untouched old verdicts are NOT
         // rewritten — the delta carries only batch rows + retro-touches

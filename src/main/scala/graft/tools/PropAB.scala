@@ -5,9 +5,8 @@ import org.apache.spark.sql.SparkSession
 import graft.{CachePool, GraftSession, SparkEntry}
 
 /** Dev profiler: generic paired same-JVM A/B over a system property
-  * read at plan-construction time (the FanOutAB protocol for any
-  * toggleable implementation choice — e.g. `graft.tokens` hof vs
-  * native). Interleaved pairs cancel this machine's burst drift.
+  * read at plan-construction time (any toggleable implementation
+  * choice — e.g. `graft.tokens` hof vs native). Interleaved pairs cancel this machine's burst drift.
   *
   * Usage: graft.tools.PropAB <prop> <valA> <valB> <q1,q2,...> [pairs]
   */

@@ -32,6 +32,24 @@ object ScaleStress {
   private def scanRows(plan: org.apache.spark.sql.execution.SparkPlan): Long =
     graft.operators.Layout.scanOutputRows(plan)
 
+  /** Task input metric `m` summed over the tasks that end while `f`
+    * runs; listener delivery is async, so poll until the sum settles. */
+  private def measuredInput(spark: SparkSession,
+      m: org.apache.spark.executor.InputMetrics => Long)(f: => Unit): Long = {
+    val total = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null) total.addAndGet(m(t.taskMetrics.inputMetrics))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      var prev = -1L; var cur = total.get(); var i = 0
+      while (cur != prev && i < 40) { Thread.sleep(250); prev = cur; cur = total.get(); i += 1 }
+      cur
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def time(name: String)(f: => Long): Unit = if (only.forall(name.contains)) {
     val t0 = System.nanoTime()
     val rows = f
@@ -182,21 +200,6 @@ object ScaleStress {
         .select($"id",
           ($"id" * 48271L % 1000000L).as("x"),
           ($"id" * 52361L % 1000000L).as("y"))
-      val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) rowsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-      }
-      def measured(f: => Unit): Long = {
-        rowsRead.set(0L)
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          f
-          var prev = -1L; var cur = rowsRead.get(); var i = 0
-          while (cur != prev && i < 40) { Thread.sleep(250); prev = cur; cur = rowsRead.get(); i += 1 }
-          cur
-        } finally spark.sparkContext.removeSparkListener(listener)
-      }
       // run one lake; return (compaction batchId, rows read, seconds)
       def run(frac: Double): Seq[(Long, Long, Double)] = {
         val root = java.nio.file.Files.createTempDirectory("graft_stress_lvl").toString
@@ -206,7 +209,7 @@ object ScaleStress {
           (0 until nBatches).foreach { b =>
             if (b > 0 && b % every == 0) {
               val t0 = System.nanoTime()
-              val rows = measured {
+              val rows = measuredInput(spark, _.recordsRead) {
                 graft.streaming.ZOrderStream.processBatch(batch(b), b, root,
                   Seq("x", "y"), compactEvery = every, targetBytes = 32L << 20,
                   majorFrac = frac, minFoldBytes = minFold)
@@ -277,21 +280,6 @@ object ScaleStress {
         .select($"id",
           ($"id" * 48271L % 1000000L).as("x"),
           ($"id" * 52361L % 1000000L).as("y"))
-      val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) rowsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-      }
-      def measured(f: => Unit): Long = {
-        rowsRead.set(0L)
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          f
-          var prev = -1L; var cur = rowsRead.get(); var i = 0
-          while (cur != prev && i < 40) { Thread.sleep(250); prev = cur; cur = rowsRead.get(); i += 1 }
-          cur
-        } finally spark.sparkContext.removeSparkListener(listener)
-      }
       // these 3-long rows encode to ~4-6 B at rest → ~1.5-2M rows/shard
       val splitBytes = 10L << 20
       def run(split: Long): (Seq[(Long, Long, Double)], String) = {
@@ -304,7 +292,7 @@ object ScaleStress {
             splitBytes = split, foldCap = 2)
           if (b > 0 && b % every == 0) {
             val t0 = System.nanoTime()
-            val rows = measured(go())
+            val rows = measuredInput(spark, _.recordsRead)(go())
             events :+= ((b.toLong, rows, (System.nanoTime() - t0) / 1e9))
           } else go()
         }
@@ -368,21 +356,6 @@ object ScaleStress {
           expr("transform(sequence(0, 19), i -> concat('w', cast((id * 2654435761 + cast(i as bigint) * i * 19349663) % 100000 as string)))"),
           when($"id" % 1000 === 0, "needle").otherwise("w1"),
           when($"id" % 700 === 0, "thread").otherwise("w2")).as("text"))
-      val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) rowsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-      }
-      def measured(f: => Unit): Long = {
-        rowsRead.set(0L)
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          f
-          var prev = -1L; var cur = rowsRead.get(); var i = 0
-          while (cur != prev && i < 40) { Thread.sleep(250); prev = cur; cur = rowsRead.get(); i += 1 }
-          cur
-        } finally spark.sparkContext.removeSparkListener(listener)
-      }
       val root = java.nio.file.Files.createTempDirectory("graft_stress_rankstream").toString
       try {
         var b = 0
@@ -395,7 +368,7 @@ object ScaleStress {
         def lookup(depth: Int): Long = {
           var got = Array.empty[Long]
           val t0 = System.nanoTime()
-          val read = measured {
+          val read = measuredInput(spark, _.recordsRead) {
             got = graft.streaming.RankedIndexStream
               .searchRanked(spark, root, Seq("needle", "thread"), topK = 20)
               .collect().map(_.getLong(0))
@@ -1374,29 +1347,12 @@ object ScaleStress {
         val probe = spark.range(2000)
           .select(expr("xxhash64(concat('s', cast(id * 3000 as string)))").as("sh"))
           .collect().map(_.getLong(0))
-        val bytesRead = new java.util.concurrent.atomic.AtomicLong()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null) bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-        }
-        def measured(f: => Unit): Long = {
-          bytesRead.set(0L)
-          spark.sparkContext.addSparkListener(listener)
-          try {
-            f
-            // listener delivery is async: poll until the counter settles
-            var prev = -1L
-            var cur = bytesRead.get()
-            var i = 0
-            while (cur != prev && i < 40) { Thread.sleep(250); prev = cur; cur = bytesRead.get(); i += 1 }
-            cur
-          } finally spark.sparkContext.removeSparkListener(listener)
-        }
         def lookup(depth: Long, push: Option[Array[Long]]): Long = {
           // sum of residues, not count(): count() would satisfy from
           // parquet footer metadata (aggregatePushdown) and read ~zero
           // bytes; raw sums of full-range hashes overflow under ANSI
-          val agg = graft.streaming.ClusterMaintenance.postingsBefore(spark, root, depth, push)
+          val agg = graft.streaming.ClusterMaintenance.postings(root)
+            .union(spark, Some(depth), Seq("sh" -> push))
             .agg(sum(pmod($"id", lit(1000L))), sum(pmod($"sh", lit(1000L))))
           agg.collect()
           scanRows(agg.queryExecution.executedPlan)
@@ -1407,12 +1363,12 @@ object ScaleStress {
           graft.streaming.ClusterMaintenance.compact(spark, root, d,
             targetRows = 250000L, bloomNdv = 2048L)
           var rows = 0L
-          val bytes = measured { rows = lookup(d, Some(probe)) }
+          val bytes = measuredInput(spark, _.bytesRead) { rows = lookup(d, Some(probe)) }
           rowsByDepth :+= (d -> rows)
           d -> bytes
         }
         var unprunedRows = 0L
-        val unprunedBytes = measured { unprunedRows = lookup(40L, None) }
+        val unprunedBytes = measuredInput(spark, _.bytesRead) { unprunedRows = lookup(40L, None) }
         val flatRows = rowsByDepth.last._2.toDouble / rowsByDepth.head._2
         val gainRows = unprunedRows.toDouble / rowsByDepth.last._2
         println(f"STRESS   pruned_scan_rows=${rowsByDepth.map { case (d, x) => s"$d:$x" }.mkString(", ")} " +
@@ -1439,7 +1395,7 @@ object ScaleStress {
     // scan. 40 delta batches × 700k rows; at depths 10/20/30/40 the
     // store is compacted and FIXED 2000-key probes (rows living in
     // batch 0, present at every depth) measure materialized scan rows
-    // through clusterRowsBefore on each key path — both must stay
+    // through the store's read on each key path — both must stay
     // ~flat while history grows 4×, and beat the unpruned scan wide.
     time("cluster_store_flat_read_rows") {
       val root = java.nio.file.Files.createTempDirectory("graft_stress_csf").toString
@@ -1460,8 +1416,8 @@ object ScaleStress {
         val probeCids = probeDocs.map(d => d - d % 5).distinct
         def lookup(depth: Long, pushDoc: Option[Array[Long]],
             pushCid: Option[Array[Long]]): Long = {
-          val agg = graft.streaming.ClusterMaintenance
-            .clusterRowsBefore(spark, root, depth, pushDoc, pushCid)
+          val agg = graft.streaming.ClusterMaintenance.clusters(root)
+            .union(spark, Some(depth), Seq("doc_id" -> pushDoc, "cluster_id" -> pushCid))
             .agg(sum(pmod($"doc_id", lit(1000L))), sum(pmod($"cluster_id", lit(1000L))))
           agg.collect()
           scanRows(agg.queryExecution.executedPlan)
@@ -1469,7 +1425,7 @@ object ScaleStress {
         var byDoc = Seq.empty[(Long, Long)]
         var byCid = Seq.empty[(Long, Long)]
         Seq(10L, 20L, 30L, 40L).foreach { d =>
-          graft.streaming.ClusterMaintenance.compactClusters(spark, root, d,
+          graft.streaming.ClusterMaintenance.compact(spark, root, d,
             targetRows = 250000L, bloomNdv = 1024L)
           byDoc :+= (d -> lookup(d, Some(probeDocs), None))
           byCid :+= (d -> lookup(d, None, Some(probeCids)))
@@ -1502,7 +1458,7 @@ object ScaleStress {
     // 16 KiB row groups ≈ fine pruning granules, per-row-group ck
     // blooms) and a FIXED 2000-bucket probe (buckets live in batch 0,
     // so present at every depth) measures the materialized scan rows
-    // of corpusBefore with the key set pushed down. Flat ⇒ a steady
+    // of the corpus read with the key set pushed down. Flat ⇒ a steady
     // micro-batch reads O(its buckets × granule) from deep history,
     // not the history itself.
     time("semdedup_stream_compaction_flat_input") {
@@ -1543,21 +1499,20 @@ object ScaleStress {
           .select(graft.streaming.SemDeDupStream.ck($"cell", $"sub").as("ck"))
           .distinct().collect().map(_.getLong(0))
         def lookup(depth: Long): Long = {
-          val agg = graft.streaming.SemDeDupStream
-            .corpusBefore(spark, root, depth, Some(probe))
+          val agg = graft.streaming.SemDeDupStream.corpus(root)
+            .union(spark, Some(depth), Seq("ck" -> Some(probe)))
             .agg(sum(pmod($"vec_id", lit(1000L))), sum(pmod($"cell", lit(1000))))
           agg.collect()
           scanRows(agg.queryExecution.executedPlan)
         }
         var byDepth = Seq.empty[(Long, Long)]
         Seq(10L, 20L, 30L, 40L).foreach { d =>
-          graft.streaming.SemDeDupStream.compactCorpus(spark, root, d,
+          graft.streaming.SemDeDupStream.compact(spark, root, d,
             targetRows = 250000L, bloomNdv = 256L)
           byDepth :+= (d -> lookup(d))
         }
         // unpruned reference at full depth
-        val agg = graft.streaming.SemDeDupStream
-          .corpusBefore(spark, root, 40L, None)
+        val agg = graft.streaming.SemDeDupStream.corpus(root).union(spark, Some(40L))
           .agg(sum(pmod($"vec_id", lit(1000L))), sum(pmod($"cell", lit(1000))))
         agg.collect()
         val unpruned = scanRows(agg.queryExecution.executedPlan)
