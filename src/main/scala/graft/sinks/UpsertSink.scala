@@ -26,9 +26,14 @@ import graft.streaming.BatchVersioned
   * `_SUCCESS`.
   *
   * Read side ([[read]]): latest record per pk across base +
-  * committed segments (ONE pk shuffle; `seg` pruning is a directory
-  * decision), tombstoned pks dropped — the materialized "current
-  * table" a compacted topic serves a bootstrapping consumer.
+  * committed segments, tombstoned pks dropped — the materialized
+  * "current table" a compacted topic serves a bootstrapping consumer.
+  * It is two parquet scans, both with the sink's own fixed schema (no
+  * inference job): the base, and ONE scan over every committed
+  * segment above it in which `seg` is the directory's partition value
+  * (the compact-plus-tail read of `BatchVersioned.Store`). Which
+  * segments count is a directory-listing decision; then ONE pk
+  * shuffle folds both scans.
   * Cross-segment conflicts resolve by the SAME `(ver, op-rank)` rule
   * as intra-batch reduction (see [[fold]]) — where the batch split
   * falls never changes the result.
@@ -45,9 +50,9 @@ import graft.streaming.BatchVersioned
   * provably covers.
   *
   * Scale: segments are append-only writes of batch size; read and
-  * compaction are one pk-keyed shuffle over base + segments — at
-  * 100 TB the base is bucketed by pk on disk and compaction runs per
-  * bucket, embarrassingly parallel. State lives entirely at rest; the
+  * compaction are one pk-keyed shuffle over the base + segment scans,
+  * so compaction rewrites the whole base each time (the base is not
+  * bucketed or partitioned by pk). State lives entirely at rest; the
   * sink holds NO driver or executor state between batches.
   */
 object UpsertSink {
@@ -56,10 +61,21 @@ object UpsertSink {
   case class UpsertChange(op: String, pk: Long, value: String, ver: Long)
 
   private val segSchema = "pk BIGINT, value STRING, ver BIGINT, rk INT, dead BOOLEAN"
+  /** What both scans yield: a base file stores `seg` per row, a
+    * segment scan takes it from its `seg=` directory. */
+  private val rowSchema = s"$segSchema, seg BIGINT"
 
   private def segDir(root: String, batchId: Long) = s"$root/seg=$batchId"
-  private def baseDirs(spark: SparkSession, root: String): Seq[(Long, String)] =
-    BatchVersioned.versions(spark, root, prefix = "base")
+
+  /** One listing of the committed `base=` and `seg=` dirs. */
+  private final case class Listing(bases: Seq[(Long, String)], segs: Seq[(Long, String)]) {
+    def baseAt: Long = bases.lastOption.map(_._1).getOrElse(-1L)
+    /** Committed segments above the newest base. */
+    def tail: Seq[(Long, String)] = segs.filter(_._1 > baseAt)
+  }
+  private def list(spark: SparkSession, root: String): Listing =
+    Listing(BatchVersioned.versions(spark, root, prefix = "base"),
+      BatchVersioned.versions(spark, root, prefix = "seg"))
 
   /** Reduce one micro-batch to upsert-kafka records and land it in an
     * idempotent per-batch segment. Call from `foreachBatch`. */
@@ -81,22 +97,19 @@ object UpsertSink {
   def sink(root: String): (Dataset[UpsertChange], Long) => Unit =
     (df, batchId) => writeBatch(df, batchId, root)
 
-  /** All committed record sources (base, if any, + segments above
-    * it). Segment rows are tagged with their directory's batch id;
-    * base rows KEEP the per-row `seg` they carried when folded — the
+  /** All committed record sources: the newest base, if any, and ONE
+    * scan over the segments above it, both read with [[rowSchema]] (the
+    * sink wrote every file with [[segSchema]], so nothing is inferred).
+    * Segment rows take `seg` from their directory's batch id; base rows
+    * KEEP the per-row `seg` they carried when folded — the
     * tombstone-retention clock must survive compaction (a tombstone's
     * age is when it was WRITTEN, not when it was last folded). */
-  private def sources(spark: SparkSession, root: String): (DataFrame, Long) = {
-    val base = baseDirs(spark, root).lastOption
-    val baseAt = base.map(_._1).getOrElse(-1L)
-    val segs = BatchVersioned.versions(spark, root, prefix = "seg")
-      .filter(_._1 > baseAt)
-    val empty = BatchVersioned.emptyDf(spark, segSchema).withColumn("seg", lit(-1L))
-    val baseDf = base.map { case (_, d) => spark.read.parquet(d) }.getOrElse(empty)
-    val segDf = segs.map { case (id, d) =>
-      spark.read.parquet(d).withColumn("seg", lit(id))
-    }.reduceOption(_.unionByName(_)).getOrElse(empty.limit(0))
-    (baseDf.unionByName(segDf), segs.lastOption.map(_._1).getOrElse(baseAt))
+  private def sources(spark: SparkSession, root: String, l: Listing): DataFrame = {
+    val base = l.bases.lastOption.map { case (_, d) => spark.read.schema(rowSchema).parquet(d) }
+    val tail = if (l.tail.isEmpty) None
+      else Some(spark.read.schema(rowSchema).option("basePath", root).parquet(l.tail.map(_._2): _*))
+    (base ++ tail).reduceOption(_ unionByName _)
+      .getOrElse(BatchVersioned.emptyDf(spark, rowSchema))
   }
 
   /** Latest record per pk across base + segments. Tombstones kept
@@ -120,43 +133,39 @@ object UpsertSink {
         col("last.rk").as("rk"), col("last.dead").as("dead"), col("last.seg").as("seg"))
 
   /** The materialized current table: one live row per pk. */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val (all, _) = sources(spark, root)
-    fold(all).filter(!col("dead")).select(col("pk"), col("value"), col("ver"))
-  }
+  def read(spark: SparkSession, root: String): DataFrame =
+    fold(sources(spark, root, list(spark, root)))
+      .filter(!col("dead")).select(col("pk"), col("value"), col("ver"))
 
   /** Fold base + segments into `base=<maxSeg>`; drop tombstones older
     * than `tombstoneRetainSegs` segments behind the fold point. No-op
-    * (idempotent replay) if that base is already committed or nothing
-    * new landed. */
+    * (idempotent replay) if no segment landed above the newest base.
+    * The fold point, the short-circuit and the GC all come from one
+    * listing of the root, taken before any frame is built. */
   def compact(spark: SparkSession, root: String, tombstoneRetainSegs: Long = 2L): Unit = {
-    val (all, at) = sources(spark, root)
-    val f0 = BatchVersioned.fs(spark, root)
-    if (at < 0 || baseDirs(spark, root).exists(_._1 == at)) {
-      // replay short-circuit — but still sweep leftovers a crash
-      // between the base write and the GC below left behind (they
-      // are invisible to reads, which filter seg > baseAt, yet they
-      // would otherwise linger on disk forever)
-      baseDirs(spark, root).lastOption.foreach { case (bv, _) =>
-        BatchVersioned.versions(spark, root, prefix = "seg").filter(_._1 <= bv)
-          .foreach { case (_, d) => f0.delete(new org.apache.hadoop.fs.Path(d), true) }
-        baseDirs(spark, root).filter(_._1 < bv)
-          .foreach { case (_, d) => f0.delete(new org.apache.hadoop.fs.Path(d), true) }
-      }
+    val l = list(spark, root)
+    val f = BatchVersioned.fs(spark, root)
+    // GC: covered segments and superseded bases — nothing a replay
+    // can reach (a replayed batch overwrites ITS OWN seg dir only)
+    def gc(upTo: Long): Unit =
+      (l.segs.filter(_._1 <= upTo) ++ l.bases.filter(_._1 < upTo))
+        .foreach { case (_, d) => f.delete(new org.apache.hadoop.fs.Path(d), true) }
+    if (l.tail.isEmpty) {
+      // replay short-circuit (base=<at> is committed) or nothing new —
+      // but still sweep leftovers a crash between the base write and
+      // the GC below left behind (they are invisible to reads, which
+      // take only segments above the base, yet they would otherwise
+      // linger on disk forever)
+      gc(l.baseAt)
       return
     }
-    val folded = fold(all)
+    val at = l.tail.last._1 // the fold point: the newest committed segment
+    val folded = fold(sources(spark, root, l))
       // a tombstone survives until every reader of base <= its seg is
       // provably gone (the retention window — measured from the seg
       // that WROTE it, which base rows preserve); live rows always stay
       .filter(!col("dead") || col("seg") >= lit(at - tombstoneRetainSegs))
     folded.write.mode("overwrite").parquet(s"$root/base=$at")
-    // GC: covered segments and superseded bases — nothing a replay
-    // can reach (a replayed batch overwrites ITS OWN seg dir only)
-    val f = BatchVersioned.fs(spark, root)
-    BatchVersioned.versions(spark, root, prefix = "seg").filter(_._1 <= at)
-      .foreach { case (_, d) => f.delete(new org.apache.hadoop.fs.Path(d), true) }
-    baseDirs(spark, root).filter(_._1 < at)
-      .foreach { case (_, d) => f.delete(new org.apache.hadoop.fs.Path(d), true) }
+    gc(at)
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver test data.
   *
@@ -11,10 +12,46 @@ import org.apache.spark.sql.functions._
   * tables via Flink SQL DDL over Kafka topics, e.g.
   * format/csv/Csv2Csv.java:27-41; here the storage is columnar files
   * so the scan itself is the optimization surface.)
+  *
+  * Each table's schema is inferred once (one Spark job) and cached;
+  * later loads read with `.schema(...)` and launch no job while a
+  * query is built. The cache key is every leaf file's path, length and
+  * modification time plus the session's parquet read confs
+  * (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`), so a
+  * rewritten file or a changed conf is inferred again.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (Seq[(String, Long, Long)], Seq[(String, String)]), StructType]()
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemaMemo.computeIfAbsent((leafFiles(spark, path), parquetConfs(spark)),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** (path, length, modification time) of every data file under `path`
+    * (a file or a directory), skipping `_`/`.` names as Spark does.
+    * Empty for a missing path, whose inference then raises Spark's own
+    * error (and caches nothing). */
+  private def leafFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toSeq.sorted
+    }
+  }
+
+  private def parquetConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -136,4 +136,26 @@ class UpsertSinkSpec extends AnyFunSuite {
     UpsertSink.compact(spark, root, tombstoneRetainSegs = 10L)
     assert(readMap(root) === Map(1L -> (("new", 5L))))
   }
+
+  test("upsert sink: read builds with no Spark job and scans the base plus ONE segment tail, however many segments") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val root = tmp()
+    runBatches(root, Seq(
+      Seq(UpsertChange("+I", 1L, "a", 1), UpsertChange("+I", 2L, "b", 1)),
+      Seq(UpsertChange("+U", 1L, "a2", 2))))
+    UpsertSink.compact(spark, root) // base=1
+    def check(segs: Int, want: Map[Long, (String, Long)]): Unit = {
+      val (plan, jobs) = jobsLaunchedBy(UpsertSink.read(spark, root).queryExecution.optimizedPlan)
+      assert(jobs === 0, s"building the read over $segs segment(s) launched $jobs job(s)")
+      val scans = plan.collect { case r: LogicalRelation if r.relation.isInstanceOf[HadoopFsRelation] => r }
+      assert(scans.size === 2, s"want base + one tail scan over $segs segment(s):\n$plan")
+      assert(readMap(root) === want)
+    }
+    runBatches(root, Seq(Seq(UpsertChange("+I", 3L, "c", 3))), from = 2L)
+    check(1, Map(1L -> (("a2", 2L)), 2L -> (("b", 1L)), 3L -> (("c", 3L))))
+    runBatches(root, Seq(
+      Seq(UpsertChange("-D", 2L, "b", 4)),
+      Seq(UpsertChange("+I", 4L, "d", 5))), from = 3L)
+    check(3, Map(1L -> (("a2", 2L)), 3L -> (("c", 3L)), 4L -> (("d", 5L))))
+  }
 }

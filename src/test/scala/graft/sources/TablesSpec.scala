@@ -56,4 +56,54 @@ class TablesSpec extends AnyFunSuite {
       assert(readBack(dir) == (("timestamp", wantMicros)))
     } finally graft.tools.FileUtil.deleteTree(java.nio.file.Paths.get(dir))
   }
+
+  test("table schemas: inferred once per unchanged file set; a changed parquet read conf infers again") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_schema_memo").toString
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val nanosWas = spark.conf.getOption(nanosKey)
+    try {
+      Seq((1L, 10L, 2.5), (2L, 20L, 7.0)).toDF("o_orderkey", "o_custkey", "o_totalprice")
+        .coalesce(1).write.parquet(s"$dir/orders.parquet")
+      val (first, firstJobs) = jobsLaunchedBy(Tables.orders(spark, dir))
+      assert(firstJobs >= 1, "the first load infers the schema with a job")
+      val (second, secondJobs) = jobsLaunchedBy(Tables.orders(spark, dir))
+      assert(secondJobs === 0, "a second load of unchanged files must reuse the schema")
+      assert(second.schema === first.schema)
+      assert(second.as[(Long, Long, Double)].collect().sorted.toSeq === Seq((1L, 10L, 2.5), (2L, 20L, 7.0)))
+
+      // a TIMESTAMP(NANOS) events file: decodes under nanosAsLong=true
+      // (the session's setting); with the flag off at runtime it must
+      // be inferred again and raise the actionable error, not reuse the
+      // schema inferred under true
+      writeNanosEvents(s"$dir/events.parquet/part-00000.parquet")
+      spark.conf.set(nanosKey, "true")
+      assert(readBack(dir) == (("timestamp", wantMicros)))
+      spark.conf.set(nanosKey, "false")
+      val e = intercept[IllegalStateException](Tables.events(spark, dir))
+      assert(e.getMessage.contains(s"set $nanosKey=true"), e.getMessage)
+    } finally {
+      nanosWas match {
+        case Some(v) => spark.conf.set(nanosKey, v)
+        case None    => spark.conf.unset(nanosKey)
+      }
+      graft.tools.FileUtil.deleteTree(java.nio.file.Paths.get(dir))
+    }
+  }
+
+  /** Spark cannot write TIMESTAMP(NANOS); parquet-mr's example writer can. */
+  private def writeNanosEvents(file: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(
+      HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf)).withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try wantMicros.zipWithIndex.foreach { case (us, i) =>
+      w.write(groups.newGroup().append("event_id", i.toLong).append("ts", us * 1000L))
+    } finally w.close()
+  }
 }
