@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, Multiply}
 
-import graft.functions.{Fingerprint, HyperplaneBits, MinHashSig, Ngrams, ShingleKeys, SimHash60, SimHashAgg, VecDot}
+import graft.functions.{Cents, Fingerprint, HyperplaneBits, MinHashSig, Ngrams, ShingleKeys, SimHash60, SimHashAgg, VecDot}
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions as SQL functions, so `spark.sql("SELECT
@@ -91,6 +91,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_mg_candidates"),
       info("graft_mg_candidates", "graft_mg_candidates(token, k) - aggregate: Misra-Gries heavy-hitter candidate set (every token above N/k guaranteed present)"),
       buildMgCandidates))
+    e.injectFunction((
+      FunctionIdentifier("graft_cents"),
+      info("graft_cents", "graft_cents(x) - round(x * 100) as bigint: the integer cents of a money-like value"),
+      buildCents))
     // graft_nearest_cell / graft_probe_cells stay Column-API-only by
     // design: their centroid-matrix argument is driver-held model state
     // (IvfIndex.Model), not something a SQL literal can express.
@@ -216,6 +220,11 @@ object GraftExtensions {
     graft.functions.MgCandidates(args.head, intLiteral("graft_mg_candidates", args(1), 1, 1 << 20))
   }
 
+  private[graft] val buildCents: Seq[Expression] => Expression = { args =>
+    arity("graft_cents", args, 1)
+    Cents(Multiply(args.head, Literal(100)))
+  }
+
   /** Register the same functions on an already-built session (useful in
     * tests and notebooks). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
@@ -236,5 +245,6 @@ object GraftExtensions {
     reg.createOrReplaceTempFunction("graft_kmv", buildKmv, "scala_udf")
     reg.createOrReplaceTempFunction("graft_kmv_arr", buildKmvArr, "scala_udf")
     reg.createOrReplaceTempFunction("graft_mg_candidates", buildMgCandidates, "scala_udf")
+    reg.createOrReplaceTempFunction("graft_cents", buildCents, "scala_udf")
   }
 }

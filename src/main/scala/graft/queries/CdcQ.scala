@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.formats.{CanalJson, DebeziumJson, DelimitedText}
+import graft.functions.Det
 import graft.operators.Cdc
 import graft.sources.Tables
 
@@ -141,8 +142,8 @@ object CdcQ extends QueryPack {
     "q75_cdc_agg" -> ((s, d) => {
       import s.implicits._
       val o = Tables.orders(s, d)
-      val cents0 = round(($"o_totalprice" - 10) * 100).cast("long")
-      val cents1 = round($"o_totalprice" * 100).cast("long")
+      val cents0 = Det.cents($"o_totalprice" - 10)
+      val cents1 = Det.cents($"o_totalprice")
       val grp0 = $"o_orderpriority"
       val grp1 = concat(lit("U-"), $"o_orderpriority")
       def ev(kind: String, cents: org.apache.spark.sql.Column,
@@ -240,7 +241,7 @@ object CdcQ extends QueryPack {
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
         .select($"user_id", $"event_id", $"ts", $"event_type",
-          round($"value" * 100).cast("long").as("cents"))
+          Det.cents($"value").as("cents"))
     }),
 
     // Deduplication KEEP FIRST ROW by EVENT time (round 13; Flink
@@ -260,7 +261,7 @@ object CdcQ extends QueryPack {
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
         .select($"user_id", $"event_id", $"ts", $"event_type",
-          round($"value" * 100).cast("long").as("cents"))
+          Det.cents($"value").as("cents"))
     }),
 
     // changelog → MAINTAINED DISTINCT aggregate (Flink retract-stream
@@ -325,8 +326,8 @@ object CdcQ extends QueryPack {
     "q114_cdc_bivar" -> ((s, d) => {
       import s.implicits._
       val o = Tables.orders(s, d)
-      val x0 = expr("cast(round((o_totalprice - 10) * 100) as bigint) div 10000")
-      val x1 = expr("cast(round(o_totalprice * 100) as bigint) div 10000")
+      val x0 = call_function("div", Det.cents($"o_totalprice" - 10), lit(10000))
+      val x1 = call_function("div", Det.cents($"o_totalprice"), lit(10000))
       val y = ($"o_custkey" % 1000).cast("long")
       def ev(kind: String, x: org.apache.spark.sql.Column,
           grp: org.apache.spark.sql.Column) = Seq(
@@ -486,8 +487,8 @@ object CdcQ extends QueryPack {
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val o = Tables.orders(s, d)
-    val cents0 = round(($"o_totalprice" - 10) * 100).cast("long")
-    val cents1 = round($"o_totalprice" * 100).cast("long")
+    val cents0 = Det.cents($"o_totalprice" - 10)
+    val cents1 = Det.cents($"o_totalprice")
     def ev(kind: String, cents: org.apache.spark.sql.Column,
         grp: org.apache.spark.sql.Column, ver: Int) = Seq(
       lit(kind).as("op"), $"o_orderkey".as("id"), cents.as("cents"),
@@ -511,8 +512,8 @@ object CdcQ extends QueryPack {
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import s.implicits._
     val o = Tables.orders(s, d)
-    val cents0 = round(($"o_totalprice" - 10) * 100).cast("long")
-    val cents1 = round($"o_totalprice" * 100).cast("long")
+    val cents0 = Det.cents($"o_totalprice" - 10)
+    val cents1 = Det.cents($"o_totalprice")
     def lev(kind: String, fk: org.apache.spark.sql.Column,
         cents: org.apache.spark.sql.Column, ver: Int) = Seq(
       lit(kind).as("op"), $"o_orderkey".as("lpk"), fk.as("fk"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.functions.Det
 import graft.operators.Multimodal
 import graft.sources.Tables
 
@@ -92,7 +93,7 @@ object MiscQ extends QueryPack {
           $"event_type".as("__rt"),
           (pmod(length($"event_type") * 9973, lit(65536))).cast("long").as("min_cents"))
       val ev = Tables.events(s, d).select(
-        $"event_id", $"event_type", round($"value" * 100).cast("long").as("cents"))
+        $"event_id", $"event_type", Det.cents($"value").as("cents"))
       ev.join(broadcast(rules), $"event_type" === $"__rt" && $"cents" >= $"min_cents")
         .select($"event_id", $"event_type", $"cents", $"min_cents")
     }),
@@ -109,7 +110,7 @@ object MiscQ extends QueryPack {
       import s.implicits._
       val ev = Tables.events(s, d).select(
         $"event_id", $"user_id", $"event_type",
-        round($"value" * 100).cast("long").as("cents"))
+        Det.cents($"value").as("cents"))
       graft.streaming.BroadcastRules.matchEventsPred(ev, Seq(
           1L -> "event_type = 'error' AND cents >= 500",
           2L -> "event_type = 'click' AND user_id % 10 = 0",

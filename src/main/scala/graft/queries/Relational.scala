@@ -122,7 +122,7 @@ object Relational extends QueryPack {
       Tables.lineitem(s, d)
         .select(
           $"l_returnflag",
-          round($"l_extendedprice" * 100).cast("long").as("v"),
+          cents($"l_extendedprice").as("v"),
           $"l_linenumber".cast("long").as("w"))
         .groupBy($"l_returnflag")
         .agg(wavg($"v", $"w").as("wavg_cents"))
@@ -135,7 +135,7 @@ object Relational extends QueryPack {
       Skew.saltedSumCount(
         Tables.events(s, d),
         keys = Seq("event_type"),
-        centsCol = round($"value" * 100).cast("long"),
+        centsCol = cents($"value"),
         saltSource = $"event_id",
         salts = 32)
     }),

@@ -72,7 +72,7 @@ object WindowsQ extends QueryPack {
       val k = (sizeUs / stepUs).toInt
       Tables.events(s, d)
         .select(unix_micros($"ts").as("us"),
-          round($"value" * 100).cast("long").as("cents"))
+          cents($"value").as("cents"))
         .withColumn("w0", expr(s"(us div $sizeUs) * $sizeUs"))
         .withColumn("k", explode(sequence(
           expr(s"cast((us - w0) div $stepUs as int) + 1"), lit(k))))
@@ -115,7 +115,7 @@ object WindowsQ extends QueryPack {
         .select(
           $"user_id", $"event_id",
           count(lit(1)).over(w).as("running_n"),
-          (sum(round($"value" * 100).cast("long")).over(w) / 100.0).as("running_value"))
+          (sum(cents($"value")).over(w) / 100.0).as("running_value"))
     }),
 
     // WINDOW join (Flink DataStream join().where().equalTo()
@@ -218,7 +218,7 @@ object WindowsQ extends QueryPack {
         .select(
           $"user_id", $"event_id",
           count(lit(1)).over(w).as("n_1h"),
-          sum(round($"value" * 100).cast("long")).over(w).as("cents_1h"))
+          sum(cents($"value")).over(w).as("cents_1h"))
     }),
 
     // ROWS-frame OVER aggregation (round 13; completes the OVER
@@ -237,7 +237,7 @@ object WindowsQ extends QueryPack {
         .select(
           $"user_id", $"event_id",
           count(lit(1)).over(w).as("n_3r"),
-          sum(round($"value" * 100).cast("long")).over(w).as("cents_3r"))
+          sum(cents($"value")).over(w).as("cents_3r"))
     }),
 
     // Windowed aggregation with GROUPING SETS (round 13; Flink SQL's
@@ -278,7 +278,7 @@ object WindowsQ extends QueryPack {
         .select(
           $"user_id", $"event_id",
           count(lit(1)).over(w).as("n_run"),
-          sum(round($"value" * 100).cast("long")).over(w).as("cents_run"))
+          sum(cents($"value")).over(w).as("cents_run"))
     }),
 
     // LAG over event-time order (round 13; Flink SQL `LAG(v) OVER
@@ -293,7 +293,7 @@ object WindowsQ extends QueryPack {
       Tables.events(s, d)
         .select(
           $"user_id", $"event_id",
-          lag(round($"value" * 100).cast("long"), 1).over(w).as("prev_cents"))
+          lag(cents($"value"), 1).over(w).as("prev_cents"))
     }),
 
     // FULL OUTER interval join (round 13; completes the interval

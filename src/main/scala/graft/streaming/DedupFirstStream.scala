@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Det
+
 /** Deduplication KEEP FIRST ROW by EVENT time, producing a retract
   * stream — Flink SQL's `ROW_NUMBER() OVER (PARTITION BY key ORDER BY
   * rowtime ASC) = 1` dedup (batch twin: q97_dedup_first), plus Flink's
@@ -75,7 +77,7 @@ object DedupFirstStream {
       .withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("long").as("key"), col(idCol).cast("long").as("id"),
         unix_micros(col(tsCol)).as("us"), col(typeCol).as("tp"),
-        round(col(valueCol) * 100).cast("long").as("cents"),
+        Det.cents(col(valueCol)).as("cents"),
         col(tsCol).as("ts"))
       .as[FirstRow]
       .groupByKey(_.key)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.Det
+
 /** Deduplication KEEP LAST ROW producing a retract stream — Flink
   * SQL's `ROW_NUMBER() OVER (PARTITION BY key ORDER BY rowtime DESC)
   * = 1` dedup, the APPEND → CHANGELOG conversion (ChangelogNormalize
@@ -48,7 +50,7 @@ object DedupLastStream {
       .select(col(keyCol).cast("long").as("key"), col(idCol).cast("long").as("id"),
         unix_micros(col(tsCol)).as("us"), col(typeCol).as("tp"),
         // integer-exact payload so downstream signed folds cancel exactly
-        round(col(valueCol) * 100).cast("long").as("cents"),
+        Det.cents(col(valueCol)).as("cents"),
         col(tsCol).as("ts"))
       .as[LastRow]
       .groupByKey(_.key)

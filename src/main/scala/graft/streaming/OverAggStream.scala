@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
+import graft.functions.Det
+
 /** Streaming event-time OVER aggregation — q81's micro-batch twin
   * (Flink SQL's `SUM(...) OVER (PARTITION BY key ORDER BY ts RANGE
   * INTERVAL 'T' PRECEDING)` on an unbounded stream, the blink
@@ -361,7 +363,7 @@ object OverAggStream {
       .withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("long").as("key"), col(idCol).cast("long").as("id"),
         unix_micros(col(tsCol)).as("us"),
-        round(col(valueCol) * lit(100)).cast("long").as("cents"), col(tsCol).as("ts"))
+        Det.cents(col(valueCol)).as("cents"), col(tsCol).as("ts"))
       .as[OverEvent]
       .groupByKey(_.key)
       // event-time TIMERS without a DECLARED output event-time column
@@ -408,7 +410,7 @@ object OverAggStream {
       .withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("long").as("key"), col(idCol).cast("long").as("id"),
         unix_micros(col(tsCol)).as("us"),
-        round(col(valueCol) * lit(100)).cast("long").as("cents"), col(tsCol).as("ts"))
+        Det.cents(col(valueCol)).as("cents"), col(tsCol).as("ts"))
       .as[OverEvent]
       .groupByKey(_.key)
       .transformWithState(new RowsProcessor(n, idleTtl.map(_.toNanos / 1000L)),
@@ -436,7 +438,7 @@ object OverAggStream {
       .withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("long").as("key"), col(idCol).cast("long").as("id"),
         unix_micros(col(tsCol)).as("us"),
-        round(col(valueCol) * lit(100)).cast("long").as("cents"), col(tsCol).as("ts"))
+        Det.cents(col(valueCol)).as("cents"), col(tsCol).as("ts"))
       .as[OverEvent]
       .groupByKey(_.key)
       .transformWithState(new UnboundedProcessor(idleTtl.map(_.toNanos / 1000L)),
@@ -460,7 +462,7 @@ object OverAggStream {
       .withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("long").as("key"), col(idCol).cast("long").as("id"),
         unix_micros(col(tsCol)).as("us"),
-        round(col(valueCol) * lit(100)).cast("long").as("cents"), col(tsCol).as("ts"))
+        Det.cents(col(valueCol)).as("cents"), col(tsCol).as("ts"))
       .as[OverEvent]
       .groupByKey(_.key)
       .transformWithState(new LagProcessor(idleTtl.map(_.toNanos / 1000L)),

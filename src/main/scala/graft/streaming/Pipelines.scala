@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
+import graft.functions.Det
+
 /** Structured Streaming mirrors of the reference's streaming jobs.
   *
   * Kafka isn't available in this environment, so sources are
@@ -156,7 +158,7 @@ object Pipelines {
     val kMax = (sizeUs / stepUs).toInt
     events
       .select(unix_micros(col("ts")).as("us"),
-        round(col("value") * 100).cast("long").as("cents"))
+        Det.cents(col("value")).as("cents"))
       .withColumn("w0", expr(s"(us div $sizeUs) * $sizeUs"))
       .withColumn("k", explode(sequence(
         expr(s"cast((us - w0) div $stepUs as int) + 1"), lit(kMax))))
@@ -186,7 +188,7 @@ object Pipelines {
     val base = events.withWatermark("ts", watermark)
     def agg(keys: Seq[org.apache.spark.sql.Column]) = base
       .groupBy((window(col("ts"), "1 hour").as("w") +: keys): _*)
-      .agg(count(lit(1)).as("n"), sum(round(col("value") * 100).cast("long")).as("cents"))
+      .agg(count(lit(1)).as("n"), sum(Det.cents(col("value"))).as("cents"))
     agg(Seq(col("event_type")))
       .select(col("w.start").as("w_start"), col("event_type"), col("n"), col("cents"))
       .unionByName(agg(Nil)

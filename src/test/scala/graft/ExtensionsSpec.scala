@@ -121,6 +121,22 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(cand === viaCol) // SQL and Column API compile to the same aggregate
   }
 
+  test("graft_cents callable from SQL, matching Det.cents on doubles, decimals and NULL") {
+    import spark.implicits._
+    GraftExtensions.register(spark)
+    // x * 100 of 1.005 falls just below the half (100.49999…); 2.675
+    // and -0.125 land exactly on 267.5 and -12.5 and round away from 0
+    val df = Seq(Some(1.005), Some(2.675), Some(-0.125), Some(19.99), None).toDF("x")
+    df.createOrReplaceTempView("cents_rows")
+    def longs(q: org.apache.spark.sql.DataFrame) =
+      q.collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long])).toSeq
+    val viaSql = longs(spark.sql("SELECT graft_cents(x) FROM cents_rows"))
+    val viaCol = longs(df.select(graft.functions.Det.cents($"x")))
+    assert(viaSql == viaCol)
+    assert(viaCol == Seq(Some(100L), Some(268L), Some(-13L), Some(1999L), None))
+    assert(spark.sql("SELECT graft_cents(CAST(-1.25 AS DECIMAL(12,2)))").head.getLong(0) == -125L)
+  }
+
   test("graft_hyperplane_bits accepts BIGINT literals and rejects non-integral args at analysis") {
     GraftExtensions.register(spark)
     // BIGINT literal (SQL `4L`) must coerce, not ClassCastException

@@ -2,7 +2,7 @@
 # Dev loop: run any graft main on the compiled classes without sbt
 # (no build lock, no sbt JVM). Usage: tools/jrun.sh graft.tools.ProfileQ q18_canal_parse 5
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Dev loop: run graft.Verify on sf0.01 then compare with DuckDB oracle.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
