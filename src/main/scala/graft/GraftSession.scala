@@ -48,7 +48,7 @@ object GraftSession {
     * heartbeat RpcTimeout under the 10 s default; relaxing the
     * heartbeat keeps a long GC pause from reading as a dead executor.
     * Applied ON TOP of [[tuned]] by the long-batch tools (Bench,
-    * ScaleStress, ScaleUpRun, ProfileQ) — deliberately NOT a base
+    * ScaleStress, ScaleUpRun, RunOne, DumpPlans) — deliberately NOT a base
     * default: under these settings a genuinely dead executor goes
     * undetected for up to 10 minutes, which is the wrong trade for
     * latency-sensitive streaming jobs. Spark requires

@@ -152,9 +152,11 @@ object SimHash60 {
   * sat in EVERY text query's hot path (the ArrayFilter lambda is
   * evaluated per element, outside whole-stage codegen). Identical
   * tokenization by construction: same [[TextKernelUtil.tokenize]] the
-  * parity-verified shingle/simhash kernels use. Element nullability
-  * kept at the HOF form's containsNull=true so downstream schemas are
-  * unchanged. */
+  * parity-verified shingle/simhash kernels use. The type declares
+  * containsNull=true although no element is ever null (the HOF form
+  * is `array<string>` with containsNull=false); the declared type is
+  * what downstream schemas and plans were built with, and
+  * KernelParitySpec pins it. */
 object TokensKernel {
   def tokens(text: UTF8String): ArrayData = {
     val (words0, m) = TextKernelUtil.tokenize(text)
@@ -162,16 +164,6 @@ object TokensKernel {
     var i = 0
     while (i < m) { out(i) = UTF8String.fromString(words0(i)); i += 1 }
     new GenericArrayData(out)
-  }
-
-  /** |{tokens(text)} ∩ set| with multiplicity — identical to
-    * `size(filter(tokens(text), w -> w IN set))`. */
-  def tokensInCount(text: UTF8String, set: java.util.HashSet[String]): Int = {
-    val (words0, m) = TextKernelUtil.tokenize(text)
-    var c = 0
-    var i = 0
-    while (i < m) { if (set.contains(words0(i))) c += 1; i += 1 }
-    c
   }
 
   /** Membership count over an ALREADY-tokenized array — so N
@@ -213,41 +205,10 @@ object Tokens {
     ColumnBridge.column(Tokens(ColumnBridge.expression(text)))
 }
 
-/** tokens_in_count(text, set) → int, codegen'd — one tokenize pass
-  * per (row, set) instead of tokenize → ArrayFilter(IN) → size, all
-  * interpreted (q42's quality score and the langId argmax evaluate
-  * this once per marker language per row). */
-case class TokensInCount(child: Expression, words: Seq[String]) extends UnaryExpression {
-  @transient private lazy val set: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](words.size * 2)
-    words.foreach(s.add)
-    s
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_tokens_in_count"
-
-  override protected def nullSafeEval(v: Any): Any =
-    TokensKernel.tokensInCount(v.asInstanceOf[UTF8String], set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("graftTokenSet", set, "java.util.HashSet<String>")
-    defineCodeGen(ctx, ev, v => s"graft.functions.TokensKernel.tokensInCount($v, $setRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TokensInCount =
-    copy(child = newChild)
-}
-
-object TokensInCount {
-  def tokensInCount(text: Column, words: Seq[String]): Column =
-    ColumnBridge.column(TokensInCount(ColumnBridge.expression(text), words))
-}
-
 /** count_in(arr, set) → int over an already-tokenized array<string>,
-  * codegen'd — the sharing-friendly sibling of [[TokensInCount]]: N
-  * sites over the SAME [[Tokens]] subtree tokenize once per row
-  * (codegen subexpression elimination), not N times. */
+  * codegen'd: N sites over the SAME [[Tokens]] subtree tokenize once
+  * per row (codegen subexpression elimination), not N times. Null
+  * elements never count. */
 case class CountIn(child: Expression, words: Seq[String]) extends UnaryExpression {
   @transient private lazy val set: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String](words.size * 2)

@@ -10,35 +10,21 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Whitespace tokens, empties dropped. */
-  /** split-on-space + drop-empties via the native codegen'd kernel
-    * (r18, [[Tokens]]): the HOF `filter(split(text, " "), ...)` form
-    * it replaces evaluated its lambda interpreted per TOKEN in every
-    * text query's hot path. Identical values (same
-    * [[TextKernelUtil.tokenize]] as the parity-verified shingle
-    * kernels). */
-  def tokens(text: Column): Column =
-    // measurement escape hatch (r18 A/B, the FanOut.widen pattern):
-    // -Dgraft.tokens=hof restores the HOF form so a paired same-JVM
-    // A/B can compare both implementations; values are identical
-    if (sys.props.get("graft.tokens").contains("hof"))
-      filter(split(text, " "), w => w =!= "")
-    else Tokens.tokens(text)
+  /** Whitespace tokens, empties dropped: split on single spaces
+    * through the native codegen'd kernel [[Tokens]] (the same
+    * [[TextKernelUtil.tokenize]] as the shingle kernels). */
+  def tokens(text: Column): Column = Tokens.tokens(text)
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** How many tokens fall in `set` — a native count over the shared
-    * [[tokens]] subtree (r18): N tokensIn sites in one projection
-    * (langId scores one per language) tokenize ONCE per row via
-    * codegen subexpression elimination. The first r18 cut
-    * (TokensInCount straight over the text) re-tokenized per site and
-    * REGRESSED q32/q33/q42 in the mid-round sweep — this form restores
-    * the sharing the HOF form got from CSE, minus its interpreted
-    * ArrayFilter. */
+  /** How many tokens fall in `set`: a native count over the shared
+    * [[tokens]] subtree, so N tokensIn sites in one projection (langId
+    * scores one per language) tokenize ONCE per row via codegen
+    * subexpression elimination. Counting straight over the text would
+    * re-tokenize per site (r18 measured that form slower on
+    * q32/q33/q42). */
   def tokensIn(text: Column, set: Seq[String]): Column =
-    if (sys.props.get("graft.tokens").contains("hof"))
-      size(filter(tokens(text), w => w.isInCollection(set)))
-    else CountIn.countIn(tokens(text), set)
+    CountIn.countIn(tokens(text), set)
 
   /** BPE-ish subword count: letter runs, digit runs, single symbols. */
   def bpeishCount(text: Column): Column =

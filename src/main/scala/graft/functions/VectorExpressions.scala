@@ -106,12 +106,14 @@ object VecKernels {
   /** [[graft.operators.IvfIndex.quantize]]'s arithmetic as one native
     * kernel: safe = ‖v‖ (or 1 for the zero vector), out_i =
     * floor(v_i/safe·1000 + 0.5). Bitwise identical to the HOF form it
-    * replaces — the norm is the SAME [[dot]] fold + sqrt the
-    * expression tree used, floor(double)→long→double round-trips
+    * replaces on finite input — the norm is the SAME [[dot]] fold +
+    * sqrt the expression tree used, floor(double)→long→double round-trips
     * exactly for the ±1000-bounded outputs — but evaluated ONCE per
     * row instead of once per ELEMENT (the lambda inlined the norm
     * subtree, so the old form paid 64 norm folds per row, interpreted).
-    * Null elements stay null (the lambda's behavior). */
+    * Null elements stay null (the lambda's behavior). A NaN quotient
+    * stays NaN (`math.floor`, like the oracle's `floor`), where the
+    * HOF's floor→long gave 0. */
   def quantizeMil(v: ArrayData): ArrayData = {
     val n = v.numElements()
     val nrm = math.sqrt(dot(v, v))
@@ -185,7 +187,8 @@ case class ToDoubleArray(child: Expression) extends UnaryExpression {
   * codegen'd kernel — the HOF form inlined the norm subtree inside
   * the per-element lambda (64 interpreted norm folds per row, twice
   * per row once Catalyst's inferred isnotnull filter duplicated the
-  * expression). Arithmetic bitwise identical ([[VecKernels.quantizeMil]]). */
+  * expression). Arithmetic bitwise identical on finite input
+  * ([[VecKernels.quantizeMil]]). */
 case class QuantizeMil(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {

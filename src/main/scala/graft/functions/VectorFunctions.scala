@@ -14,17 +14,11 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Cast array<float> → array<double> (exact). */
   /** array<float|int|long|double> → array<double> via the native
-    * codegen'd kernel (r18): the HOF `transform(a, cast)` form it
-    * replaces is interpreted per element AND was duplicated wholesale
-    * into inferred null filters and downstream lambdas (q59/q70
-    * before-plans). Same cast semantics, null elements preserved. */
-  def vec(a: Column): Column =
-    // measurement escape hatch (r18 A/B): -Dgraft.vec=hof restores
-    // the HOF cast form; values identical
-    if (sys.props.get("graft.vec").contains("hof")) transform(a, x => x.cast("double"))
-    else VectorExpressions.toDoubleArray(a)
+    * codegen'd kernel [[ToDoubleArray]]: the SQL cast per element
+    * (exact for float/int; long rounds like the cast), null elements
+    * preserved. */
+  def vec(a: Column): Column = VectorExpressions.toDoubleArray(a)
 
   /** Sequential-fold dot product (native codegen'd kernel; same fold
     * order as `aggregate(zip_with(a,b,*), 0.0, +)` — see

@@ -311,10 +311,10 @@ object Dedup {
     // decides the path and, when small, already delivers the edges —
     // the count-then-collect pair it replaces cost one extra
     // scheduling round per CC call (the q41 build and each media keep
-    // tail, ProfileMedia evidence). Exactly max+1 rows returned means
-    // "big": discard the probe (it materialized only part of the
-    // cache; the distributed path's first action finishes it) and run
-    // the distributed rounds. On the big path CollectLimit's
+    // tail, measured by r17's q64 phase split). Exactly max+1 rows
+    // returned means "big": discard the probe (it materialized only
+    // part of the cache; the distributed path's first action finishes
+    // it) and run the distributed rounds. On the big path CollectLimit's
     // incremental partition scan stops as soon as max+1 rows surface
     // — bounded at ~16 MB of driver traffic at any corpus size.
     val probe = pairsP.limit(driverMaxEdges.toInt + 1).collect()

@@ -45,24 +45,13 @@ object IvfIndex {
     * exact-integer doubles in [-1000, 1000]. Zero-norm vectors (failed
     * embeddings) divide by 1 instead of 0 — all-zero stays all-zero.
     *
-    * Native codegen'd kernel (r18,
-    * [[graft.functions.VecKernels.quantizeMil]]): the HOF
-    * `transform(v, x -> floor(x/safe·1000 + 0.5))` it replaces
-    * inlined the norm subtree INSIDE the per-element lambda — 64
-    * interpreted norm folds per row, and Catalyst's inferred
-    * isnotnull filters duplicated the whole chain again (q59/q70
-    * before-plans). Arithmetic is bitwise identical: same
-    * [[graft.functions.VecKernels.dot]] fold + sqrt, and
-    * floor(double)→long→double round-trips exactly on the ±1000
-    * range, so the DuckDB `vq` replay is unchanged. */
-  def quantize(v: Column): Column =
-    // same -Dgraft.vec=hof escape hatch as VectorFunctions.vec, so a
-    // paired A/B toggles the whole r18 vector-kernel batch at once
-    if (sys.props.get("graft.vec").contains("hof")) {
-      val nrm = VectorFunctions.norm(v)
-      val safe = when(nrm === 0.0, lit(1.0)).otherwise(nrm)
-      transform(v, x => floor(x / safe * lit(1000.0) + lit(0.5)).cast("double"))
-    } else graft.functions.VectorExpressions.quantizeMil(v)
+    * One native codegen'd kernel ([[graft.functions.VecKernels.quantizeMil]]):
+    * the norm is one [[graft.functions.VecKernels.dot]] fold + sqrt per
+    * row, and floor(double) stays exact on the ±1000 range, so the
+    * DuckDB `vq` replay matches. NaN stays NaN through the floor, as
+    * in the oracle (NaN or ±Inf input makes NaN outputs; pinned in
+    * KernelParitySpec). */
+  def quantize(v: Column): Column = VectorExpressions.quantizeMil(v)
 
   /** Trained model: dense by cell id; `cent(j) == null` marks a cell
     * whose residue class had no seed vector (never probed/assigned). */
@@ -163,23 +152,17 @@ object IvfIndex {
     // model trained under different preprocessing.
     val (prepTag, prep) = prepped
     memo.computeIfAbsent((spark.sparkContext.applicationId, s"$memoKey|$cells|$iters|$sampleMod|$prepTag"), _ => {
-      val dbg = sys.env.contains("GRAFT_TRAIN_DEBUG")
-      def tlog(name: String, t0: Long): Unit =
-        if (dbg) println(f"TRAIN $name=${(System.nanoTime() - t0) / 1e9}%.1f s")
       val vq = emb.filter(col("vec_id") % sampleMod === 0)
         .select(col("vec_id"), prep(col("v")).as("vq")).persist()
       try {
-        val t0 = System.nanoTime()
         val seeds = vq.groupBy((col("vec_id") % cells).cast("int").as("cell"))
           .agg(min(col("vec_id")).as("sid"))
         val cent = new Array[Array[Double]](cells)
         vq.join(seeds, vq("vec_id") === seeds("sid"))
           .select(col("cell"), col("vq")).collect()
           .foreach(r => cent(r.getInt(0)) = r.getSeq[Double](1).toArray)
-        tlog("seeds", t0)
         var model = Model(cent, cent.map(c => if (c == null) 0.0 else csqOf(c)))
         (1 to iters).foreach { _ =>
-          val ti = System.nanoTime()
           // assignment scan (shuffle-free kernel) + exact integer sums.
           // The update fold is a TYPED Aggregator over primitive
           // arrays: partial (map-side) sums per partition, ≤ cells
@@ -202,7 +185,6 @@ object IvfIndex {
             .groupByKey(_._1)
             .agg(SumVec.toColumn)
             .collect()
-          tlog("iter", ti)
           val next = model.cent.clone()
           sums.foreach { case (cell, (a, n)) =>
             // nearestCell returns -1 when EVERY centroid slot is null

@@ -36,8 +36,8 @@ object Multimodal {
   // TEMP FILE (FileCacheImage{In,Out}putStream) — pure disk overhead
   // on these ~KB in-memory payloads, paid per image per codec call.
   // Memory-cached streams produce byte-identical output. JVM-global,
-  // set once when the media kernels load (r18; ProfileMedia measured
-  // the q64 synth+encode+hash stage dropping ~40% — see
+  // set once when the media kernels load (r18: a q64 phase split
+  // measured the synth+encode+hash stage dropping ~40% — see
   // OPTIMIZATION_r18.md).
   javax.imageio.ImageIO.setUseCache(false)
 

@@ -61,7 +61,8 @@ object AbsenceStream {
       responses = getHandle.getListState[RespUs]("responses", Encoders.product[RespUs], TTLConfig.NONE)
     }
 
-    private def fold(key: Long, pending: Seq[Pending], wmUs: Long): Iterator[Alert] = {
+    private def fold(key: Long, pending: Seq[Pending], wmUs: Long,
+        firing: Option[Long]): Iterator[Alert] = {
       // decided: the full response window is below the watermark
       val (decided, hold) = pending.partition(a => a.us + windowUs < wmUs)
       val resp = responses.get().map(_.us).toArray.sorted
@@ -76,16 +77,15 @@ object AbsenceStream {
       val live = resp.filter(_ > wmUs - windowUs)
       responses.clear()
       if (live.nonEmpty) responses.appendList(live.map(RespUs).toArray)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      if (hold.nonEmpty)
-        getHandle.registerTimer((hold.map(_.us).min + windowUs) / 1000L + 1L)
-      else if (live.nonEmpty)
+      KeyTimer.rearm(getHandle, firing,
+        if (hold.nonEmpty) Some((hold.map(_.us).min + windowUs) / 1000L + 1L)
         // no pending anchors but retained responses: without a timer a
         // key whose last activity is responses-only would hold its
         // pruned list forever (the bounded-state contract breaks
         // across millions of dormant keys) — arm one at the point the
         // newest response becomes unprunable-for-no-one
-        getHandle.registerTimer((live.max + windowUs) / 1000L + 1L)
+        else if (live.nonEmpty) Some((live.max + windowUs) / 1000L + 1L)
+        else None)
       out.iterator
     }
 
@@ -96,12 +96,13 @@ object AbsenceStream {
       if (newResp.nonEmpty) responses.appendList(newResp.toArray)
       val pending = anchors.get().toSeq ++
         incoming.filter(_.is_anchor).map(r => Pending(r.id, r.us))
-      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Alert] =
-      fold(key, anchors.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, anchors.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Alert stream over a streaming events relation: one [[Alert]] per

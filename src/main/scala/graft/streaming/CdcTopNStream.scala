@@ -347,9 +347,6 @@ object CdcTopNStream {
       // dead slots outnumber max(64, live), pay one O(live+dead)
       // sweep — once per O(dead) deletions, amortized O(1) per change
       if (m != null) {
-        if (sys.env.contains("GRAFT_TOMB_DEBUG"))
-          println(s"TOMB topn grp=$grp live=${m.liveCnt} dead=${m.deadCnt} maxVer=${m.maxVer} " +
-            s"forced=${m.deadCnt > math.max(64L, m.liveCnt)} scanNeeded=$scanNeeded")
         if (m.deadCnt > math.max(64L, m.liveCnt))
           m = m.copy(deadCnt = m.deadCnt -
             Tombstones.compact(slots, m.maxVer, tombstoneVerHorizon.get)(_.live, _.ver))
@@ -367,15 +364,7 @@ object CdcTopNStream {
       // members the downstream materializer already holds (idempotent
       // on (grp, id)).
       idleTtlMs.foreach { ttl =>
-        if (batchMaxTsMs != Long.MinValue) {
-          val want = batchMaxTsMs + ttl + 1L
-          var prevMax = Long.MinValue
-          getHandle.listTimers().foreach(t => prevMax = math.max(prevMax, t.asInstanceOf[Long]))
-          if (want > prevMax) {
-            getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-            getHandle.registerTimer(want)
-          }
-        }
+        if (batchMaxTsMs != Long.MinValue) KeyTimer.advance(getHandle, batchMaxTsMs + ttl + 1L)
       }
 
       // membership diff; surviving members keep their entry-time

@@ -83,7 +83,8 @@ object CepMatchStream {
     private def lexLess(aUs: Long, aId: Long, bUs: Long, bId: Long): Boolean =
       aUs < bUs || (aUs == bUs && aId < bId)
 
-    private def fold(key: Long, pending: Seq[PendingA], wmUs: Long): Iterator[CepOutcome] = {
+    private def fold(key: Long, pending: Seq[PendingA], wmUs: Long,
+        firing: Option[Long]): Iterator[CepOutcome] = {
       val rs = resps.get().toArray.sortBy(r => (r.us, r.id))
       val ms = mids.get().toArray.sortBy(m => (m.us, m.id))
       // count of mids lexicographically BELOW (us, id)
@@ -163,21 +164,22 @@ object CepMatchStream {
       val liveM = ms.filter(_.us > wmUs - windowUs)
       resps.clear(); if (liveR.nonEmpty) resps.appendList(liveR)
       mids.clear(); if (liveM.nonEmpty) mids.appendList(liveM)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      if (held.nonEmpty) {
-        // earliest decision point across held anchors; under skipPast
-        // only the BLOCKER (first held in order) can decide next — a
-        // later anchor's earlier response must not re-arm a timer that
-        // can make no progress
-        val decCandidates = if (skipPast) held.take(1) else held
-        val dec = decCandidates.map { a =>
-          liveR.find(r => r.us > a.us && r.us <= a.us + windowUs)
-            .map(_.us).getOrElse(a.us + windowUs)
-        }.min
-        getHandle.registerTimer(dec / 1000L + 1L)
-      } else if (liveR.nonEmpty || liveM.nonEmpty)
-        // span-only keys: arm cleanup so dormant keys drop their tail
-        getHandle.registerTimer(((liveR.map(_.us) ++ liveM.map(_.us)).max + windowUs) / 1000L + 1L)
+      KeyTimer.rearm(getHandle, firing,
+        if (held.nonEmpty) {
+          // earliest decision point across held anchors; under skipPast
+          // only the BLOCKER (first held in order) can decide next — a
+          // later anchor's earlier response must not re-arm a timer that
+          // can make no progress
+          val decCandidates = if (skipPast) held.take(1) else held
+          val dec = decCandidates.map { a =>
+            liveR.find(r => r.us > a.us && r.us <= a.us + windowUs)
+              .map(_.us).getOrElse(a.us + windowUs)
+          }.min
+          Some(dec / 1000L + 1L)
+        } else if (liveR.nonEmpty || liveM.nonEmpty)
+          // span-only keys: arm cleanup so dormant keys drop their tail
+          Some(((liveR.map(_.us) ++ liveM.map(_.us)).max + windowUs) / 1000L + 1L)
+        else None)
       out.result().iterator
     }
 
@@ -190,12 +192,13 @@ object CepMatchStream {
       if (newM.nonEmpty) mids.appendList(newM.toArray)
       val pending = anchors.get().toSeq ++
         incoming.filter(_.kind == KAnchor).map(a => PendingA(a.id, a.us))
-      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[CepOutcome] =
-      fold(key, anchors.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, anchors.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Match stream over a streaming events relation: one [[CepMatch]]

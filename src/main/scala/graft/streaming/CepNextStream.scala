@@ -48,7 +48,8 @@ object CepNextStream {
       evs = getHandle.getListState[EvRow]("evs", Encoders.product[EvRow], TTLConfig.NONE)
     }
 
-    private def fold(key: Long, pending: Seq[PendingA], wmUs: Long): Iterator[CepNext] = {
+    private def fold(key: Long, pending: Seq[PendingA], wmUs: Long,
+        firing: Option[Long]): Iterator[CepNext] = {
       val es = evs.get().toArray.sortBy(e => (e.us, e.id))
       val out = Vector.newBuilder[CepNext]
       val hold = Vector.newBuilder[PendingA]
@@ -77,12 +78,11 @@ object CepNextStream {
       // the watermark can matter to no held or future anchor
       val live = es.filter(_.us >= wmUs)
       evs.clear(); if (live.nonEmpty) evs.appendList(live)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      if (held.nonEmpty)
-        getHandle.registerTimer(holdCand.result().min / 1000L + 1L)
-      else if (live.nonEmpty)
+      KeyTimer.rearm(getHandle, firing,
+        if (held.nonEmpty) Some(holdCand.result().min / 1000L + 1L)
         // event-only keys: clean the tail once the watermark passes it
-        getHandle.registerTimer(live.map(_.us).max / 1000L + 1L)
+        else if (live.nonEmpty) Some(live.map(_.us).max / 1000L + 1L)
+        else None)
       out.result().iterator
     }
 
@@ -92,12 +92,13 @@ object CepNextStream {
       evs.appendList(incoming.map(e => EvRow(e.id, e.us, e.resp)).toArray)
       val pending = anchors.get().toSeq ++
         incoming.filter(_.anchor).map(a => PendingA(a.id, a.us))
-      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[CepNext] =
-      fold(key, anchors.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, anchors.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Strict-contiguity match stream: one [[CepNext]] per `anchorType`

@@ -45,7 +45,7 @@ object CepRunsStream {
       run = getHandle.getValueState[OpenRun]("run", Encoders.product[OpenRun], TTLConfig.NONE)
     }
 
-    private def fold(key: Long, wmUs: Long): Iterator[CepRun] = {
+    private def fold(key: Long, wmUs: Long, firing: Option[Long]): Iterator[CepRun] = {
       val all = evs.get().toArray.sortBy(e => (e.us, e.id))
       val (decided, held) = all.partition(_.us < wmUs)
       val out = Vector.newBuilder[CepRun]
@@ -68,23 +68,23 @@ object CepRunsStream {
       open.foreach { r => if (wmUs > r.lastUs + gapUs) { close(r); open = None } }
       open match { case Some(r) => run.update(r); case None => run.clear() }
       evs.clear(); if (held.nonEmpty) evs.appendList(held)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
       val decisions =
         open.map(_.lastUs + gapUs).toSeq ++
           (if (held.nonEmpty) Seq(held.map(_.us).max) else Seq.empty)
-      if (decisions.nonEmpty) getHandle.registerTimer(decisions.min / 1000L + 1L)
+      KeyTimer.rearm(getHandle, firing, decisions.minOption.map(_ / 1000L + 1L))
       out.result().iterator
     }
 
     override def handleInputRows(key: Long, rows: Iterator[RunEvent],
         timers: TimerValues): Iterator[CepRun] = {
       evs.appendList(rows.map(e => EvRow(e.id, e.us, e.anchor)).toArray)
-      fold(key, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[CepRun] =
-      fold(key, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Run stream: one [[CepRun]] per maximal gap-bounded run of

@@ -59,7 +59,8 @@ object FunnelStream {
 
     /** Fold every buffered event with us < `upToUs` into the step
       * machine (in event-time order) and emit the advances. */
-    private def fold(key: Long, pending: Seq[BufEvent], upToUs: Long): Iterator[StepAdvance] = {
+    private def fold(key: Long, pending: Seq[BufEvent], upToUs: Long,
+        firing: Option[Long]): Iterator[StepAdvance] = {
       val (ready, hold) = pending.partition(_.us < upToUs)
       val st = scala.collection.mutable.ArrayBuffer.empty[Long]
       Option(reached.get()).foreach(r => st ++= r.ts)
@@ -80,8 +81,7 @@ object FunnelStream {
       // rest (anchoring at the newest would withhold already-final
       // advances until the watermark passed a possibly far-future
       // buffered event — producer clock skew)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      if (hold.nonEmpty) getHandle.registerTimer(hold.map(_.us).min / 1000L + 1L)
+      KeyTimer.rearm(getHandle, firing, hold.map(_.us).minOption.map(_ / 1000L + 1L))
       advances.iterator
     }
 
@@ -89,12 +89,13 @@ object FunnelStream {
         timers: TimerValues): Iterator[StepAdvance] = {
       val pending = buf.get().toSeq ++ rows.map(r => BufEvent(r.etype, r.us))
       val wmUs = timers.getCurrentWatermarkInMs() * 1000L
-      fold(key, pending, wmUs) // fold arms the hold timer itself
+      fold(key, pending, wmUs, None) // fold arms the hold timer itself
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[StepAdvance] =
-      fold(key, buf.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, buf.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Append-only (user_id, step, us) advance stream over a streaming

@@ -52,7 +52,7 @@ object MatchVStream {
       ph = getHandle.getValueState[VPhase]("ph", Encoders.product[VPhase], TTLConfig.NONE)
     }
 
-    private def fold(key: Long, wmUs: Long): Iterator[VMatch] = {
+    private def fold(key: Long, wmUs: Long, firing: Option[Long]): Iterator[VMatch] = {
       val all = buf.get().toArray.sortBy(e => (e.us, e.id))
       val (decided, held) = all.partition(_.us < wmUs)
       val out = Vector.newBuilder[VMatch]
@@ -98,23 +98,23 @@ object MatchVStream {
       lst match { case Some(r) => last.update(r); case None => last.clear() }
       if (p.phase == 0) ph.clear() else ph.update(p)
       buf.clear(); if (held.nonEmpty) buf.appendList(held)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
       val decisions =
         lst.map(_.us + gapUs).toSeq ++
           (if (held.nonEmpty) Seq(held.map(_.us).max) else Seq.empty)
-      if (decisions.nonEmpty) getHandle.registerTimer(decisions.min / 1000L + 1L)
+      KeyTimer.rearm(getHandle, firing, decisions.minOption.map(_ / 1000L + 1L))
       out.result().iterator
     }
 
     override def handleInputRows(key: Long, rows: Iterator[VEvent],
         timers: TimerValues): Iterator[VMatch] = {
       buf.appendList(rows.map(e => VRow(e.id, e.us, e.v)).toArray)
-      fold(key, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[VMatch] =
-      fold(key, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** V-pattern stream: one [[VMatch]] per maximal descent immediately

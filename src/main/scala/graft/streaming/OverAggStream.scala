@@ -75,7 +75,7 @@ object OverAggStream {
       schemaTag = StateSchemaVer.state(getHandle)
     }
 
-    private def fold(key: Long, events: Seq[Held], wmUs: Long): Iterator[OverAgg] = {
+    private def fold(key: Long, events: Seq[Held], wmUs: Long, firing: Option[Long]): Iterator[OverAgg] = {
       // sort once; prefix sums make every frame lookup two binary
       // searches — never a per-event rescan
       val sorted = events.sortBy(e => (e.us, e.id)).toArray
@@ -111,15 +111,16 @@ object OverAggStream {
         .toArray
       held.clear()
       if (keep.nonEmpty) held.appendList(keep)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
       val pending = keep.filter(!_.emitted)
-      if (pending.nonEmpty)
-        // fire once the watermark strictly passes the oldest pending ts
-        getHandle.registerTimer(pending.map(_.us).min / 1000L + 1L)
-      else if (keep.nonEmpty)
-        // decided-but-retained only: arm a cleanup timer so a dormant
-        // key does not hold its frame tail forever
-        getHandle.registerTimer((keep.map(_.us).max + windowUs) / 1000L + 1L)
+      KeyTimer.rearm(getHandle, firing,
+        if (pending.nonEmpty)
+          // fire once the watermark strictly passes the oldest pending ts
+          Some(pending.map(_.us).min / 1000L + 1L)
+        else if (keep.nonEmpty)
+          // decided-but-retained only: arm a cleanup timer so a dormant
+          // key does not hold its frame tail forever
+          Some((keep.map(_.us).max + windowUs) / 1000L + 1L)
+        else None)
       out.iterator
     }
 
@@ -127,12 +128,13 @@ object OverAggStream {
         timers: TimerValues): Iterator[OverAgg] = {
       StateSchemaVer.check(schemaTag, SchemaV, "overAgg")
       val incoming = rows.map(r => Held(r.id, r.us, r.cents, emitted = false)).toSeq
-      fold(key, held.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, held.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[OverAgg] =
-      fold(key, held.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, held.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** ROWS-frame twin of [[OverProcessor]] (Flink SQL `ROWS BETWEEN
@@ -161,7 +163,7 @@ object OverAggStream {
       schemaTag = StateSchemaVer.state(getHandle)
     }
 
-    private def fold(key: Long, events: Seq[Held], wmUs: Long): Iterator[OverAgg] = {
+    private def fold(key: Long, events: Seq[Held], wmUs: Long, firing: Option[Long]): Iterator[OverAgg] = {
       val sorted = events.sortBy(e => (e.us, e.id)).toArray
       val pfx = new Array[Long](sorted.length + 1)
       var i = 0
@@ -174,7 +176,7 @@ object OverAggStream {
         }.toVector
       val (dec, undec) = sorted.partition(_.us < wmUs)
       var keep = dec.takeRight(n - 1).map(_.copy(emitted = true)) ++ undec
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
+      var idleAt: Option[Long] = None
       // idle-state TTL (see overRows): with nothing pending, a key
       // whose last-seen event time has fallen idleTtlUs behind the
       // watermark drops its decided tail entirely; otherwise arm the
@@ -185,12 +187,12 @@ object OverAggStream {
       if (undec.isEmpty && keep.nonEmpty) idleTtlUs.foreach { ttl =>
         val lastSeenUs = keep.iterator.map(_.us).max
         if (wmUs >= lastSeenUs + ttl) keep = Array.empty[Held]
-        else getHandle.registerTimer((lastSeenUs + ttl) / 1000L + 1L)
+        else idleAt = Some((lastSeenUs + ttl) / 1000L + 1L)
       }
       held.clear()
       if (keep.nonEmpty) held.appendList(keep)
-      if (undec.nonEmpty)
-        getHandle.registerTimer(undec.map(_.us).min / 1000L + 1L)
+      KeyTimer.rearm(getHandle, firing,
+        if (undec.nonEmpty) Some(undec.map(_.us).min / 1000L + 1L) else idleAt)
       out.iterator
     }
 
@@ -198,12 +200,13 @@ object OverAggStream {
         timers: TimerValues): Iterator[OverAgg] = {
       StateSchemaVer.check(schemaTag, SchemaV, "overRows")
       val incoming = rows.map(r => Held(r.id, r.us, r.cents, emitted = false)).toSeq
-      fold(key, held.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, held.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[OverAgg] =
-      fold(key, held.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, held.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Running-total accumulator state (public for encoder codegen);
@@ -240,7 +243,7 @@ object OverAggStream {
       schemaTag = StateSchemaVer.state(getHandle)
     }
 
-    private def fold(key: Long, events: Seq[Held], wmUs: Long): Iterator[OverAgg] = {
+    private def fold(key: Long, events: Seq[Held], wmUs: Long, firing: Option[Long]): Iterator[OverAgg] = {
       val sorted = events.sortBy(e => (e.us, e.id))
       var a = if (acc.exists()) acc.get() else RunAcc(0L, 0L, Long.MinValue)
       val (dec, undec) = sorted.partition(_.us < wmUs)
@@ -250,7 +253,6 @@ object OverAggStream {
       }.toVector
       pending.clear()
       if (undec.nonEmpty) pending.appendList(undec.toArray)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
       // idle-state TTL (see overUnbounded): with nothing pending, a
       // key idle idleTtlUs past its last decided row clears BOTH
       // states (the key's next row restarts the running totals from
@@ -258,14 +260,11 @@ object OverAggStream {
       // timer re-arms so a quiet key still expires.
       val expired = undec.isEmpty && idleTtlUs.exists(ttl =>
         a.lastUs != Long.MinValue && wmUs >= a.lastUs + ttl)
-      if (expired) acc.clear()
-      else {
-        acc.update(a)
-        if (undec.isEmpty && a.lastUs != Long.MinValue) idleTtlUs.foreach(ttl =>
-          getHandle.registerTimer((a.lastUs + ttl) / 1000L + 1L))
-      }
-      if (undec.nonEmpty)
-        getHandle.registerTimer(undec.map(_.us).min / 1000L + 1L)
+      if (expired) acc.clear() else acc.update(a)
+      KeyTimer.rearm(getHandle, firing,
+        if (undec.nonEmpty) Some(undec.map(_.us).min / 1000L + 1L)
+        else if (expired || a.lastUs == Long.MinValue) None
+        else idleTtlUs.map(ttl => (a.lastUs + ttl) / 1000L + 1L))
       out.iterator
     }
 
@@ -273,12 +272,13 @@ object OverAggStream {
         timers: TimerValues): Iterator[OverAgg] = {
       StateSchemaVer.check(schemaTag, SchemaV, "overUnbounded")
       val incoming = rows.map(r => Held(r.id, r.us, r.cents, emitted = false)).toSeq
-      fold(key, pending.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[OverAgg] =
-      fold(key, pending.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** LAG output row; `prev_cents` is None for the key's first event. */
@@ -308,7 +308,7 @@ object OverAggStream {
       schemaTag = StateSchemaVer.state(getHandle)
     }
 
-    private def fold(key: Long, events: Seq[Held], wmUs: Long): Iterator[OverLag] = {
+    private def fold(key: Long, events: Seq[Held], wmUs: Long, firing: Option[Long]): Iterator[OverLag] = {
       val sorted = events.sortBy(e => (e.us, e.id))
       var prev = if (last.exists()) Some(last.get()) else None
       val (dec, undec) = sorted.partition(_.us < wmUs)
@@ -319,21 +319,17 @@ object OverAggStream {
       }.toVector
       pending.clear()
       if (undec.nonEmpty) pending.appendList(undec.toArray)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
       // idle-state TTL (see overLag): with nothing pending, a key
       // idle idleTtlUs past its last decided row drops the image (the
       // key's next row is a fresh "first" — prev_cents None, the
       // documented straggler trade); otherwise the timer re-arms.
       val expired = undec.isEmpty && idleTtlUs.exists(ttl =>
         prev.exists(p => wmUs >= p.us + ttl))
-      if (expired) last.clear()
-      else {
-        prev.foreach(last.update)
-        if (undec.isEmpty) idleTtlUs.foreach(ttl =>
-          prev.foreach(p => getHandle.registerTimer((p.us + ttl) / 1000L + 1L)))
-      }
-      if (undec.nonEmpty)
-        getHandle.registerTimer(undec.map(_.us).min / 1000L + 1L)
+      if (expired) last.clear() else prev.foreach(last.update)
+      KeyTimer.rearm(getHandle, firing,
+        if (undec.nonEmpty) Some(undec.map(_.us).min / 1000L + 1L)
+        else if (expired) None
+        else for (ttl <- idleTtlUs; p <- prev) yield (p.us + ttl) / 1000L + 1L)
       out.iterator
     }
 
@@ -341,12 +337,13 @@ object OverAggStream {
         timers: TimerValues): Iterator[OverLag] = {
       StateSchemaVer.check(schemaTag, SchemaV, "overLag")
       val incoming = rows.map(r => Held(r.id, r.us, r.cents, emitted = false)).toSeq
-      fold(key, pending.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending.get().toSeq ++ incoming, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[OverLag] =
-      fold(key, pending.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Per-event trailing-window aggregate over a streaming events

@@ -778,9 +778,8 @@ object Pipelines {
       val existing = scala.collection.mutable.ArrayBuffer.empty[Long]
       fps.get().foreach(existing += _)
       // re-arm the quiet-bucket cleanup timer to last activity + retention
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(
-        math.max(sorted.last.ts.getTime, timers.getCurrentWatermarkInMs()) + retention.toMillis)
+      KeyTimer.rearm(getHandle, None,
+        Some(math.max(sorted.last.ts.getTime, timers.getCurrentWatermarkInMs()) + retention.toMillis))
       sorted.iterator.map { r =>
         val dup = existing.exists(f => java.lang.Long.bitCount(f ^ r.fp) <= maxDist)
         // an fp equal to a stored one adds no matching power — skip
@@ -912,9 +911,8 @@ object Pipelines {
       val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.vid, r.fidx))
       val existing = scala.collection.mutable.ArrayBuffer.empty[FrameEntry]
       frames.get().foreach(existing += _)
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(
-        math.max(sorted.last.ts.getTime, timers.getCurrentWatermarkInMs()) + retention.toMillis)
+      KeyTimer.rearm(getHandle, None,
+        Some(math.max(sorted.last.ts.getTime, timers.getCurrentWatermarkInMs()) + retention.toMillis))
       val out = scala.collection.mutable.ArrayBuffer.empty[FrameMatch]
       sorted.foreach { r =>
         existing.foreach { e =>

@@ -74,7 +74,8 @@ object TemporalJoinStream {
 
     /** Resolve every fact with `us < wmUs` against the (now final)
       * version history, emit, and shrink both buffers. */
-    private def fold(key: Long, pendingFacts: Seq[BufF], wmUs: Long): Iterator[Enriched] = {
+    private def fold(key: Long, pendingFacts: Seq[BufF], wmUs: Long,
+        firing: Option[Long]): Iterator[Enriched] = {
       val (ready, hold) = pendingFacts.partition(_.us < wmUs)
       val versions = dims.get().toSeq.sortBy(_.us)
       val out = ready.sortBy(_.us).iterator.flatMap { f =>
@@ -98,8 +99,7 @@ object TemporalJoinStream {
       }
       // re-arm: fold the earliest held fact as soon as the watermark
       // passes it, input or not
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      if (hold.nonEmpty) getHandle.registerTimer(hold.map(_.us).min / 1000L + 1L)
+      KeyTimer.rearm(getHandle, firing, hold.map(_.us).minOption.map(_ / 1000L + 1L))
       out.iterator
     }
 
@@ -110,12 +110,13 @@ object TemporalJoinStream {
       if (newDims.nonEmpty) dims.appendList(newDims.toArray)
       val pending = facts.get().toSeq ++
         incoming.filterNot(_.is_dim).map(r => BufF(r.us, r.payload))
-      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, pending, timers.getCurrentWatermarkInMs() * 1000L, None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Enriched] =
-      fold(key, facts.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L)
+      fold(key, facts.get().toSeq, timers.getCurrentWatermarkInMs() * 1000L,
+        Some(expired.getExpiryTimeInMs()))
   }
 
   /** Enrich a streaming `facts` relation (`keyCol`, `tsCol`,

@@ -74,15 +74,7 @@ object TopNRetractStream {
       // event-time idle TTL (see [[topNIdle]]): advance the idle
       // timer to lastSeen + ttl on every touch, never earlier
       idleTtlMs.foreach { ttl =>
-        if (batchMaxTsMs != Long.MinValue) {
-          val want = batchMaxTsMs + ttl + 1L
-          var prevMax = Long.MinValue
-          getHandle.listTimers().foreach(t => prevMax = math.max(prevMax, t.asInstanceOf[Long]))
-          if (want > prevMax) {
-            getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-            getHandle.registerTimer(want)
-          }
-        }
+        if (batchMaxTsMs != Long.MinValue) KeyTimer.advance(getHandle, batchMaxTsMs + ttl + 1L)
       }
       val next = best.toSeq.map { case (id, s) => TopEntry(id, s) }
         .sortBy(e => (-e.score, e.id)).take(n)

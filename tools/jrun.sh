@@ -1,6 +1,6 @@
 #!/bin/bash
 # Dev loop: run any graft main on the compiled classes without sbt
-# (no build lock, no sbt JVM). Usage: tools/jrun.sh graft.tools.ProfileQ q18_canal_parse 5
+# (no build lock, no sbt JVM). Usage: tools/jrun.sh graft.tools.RunOne q18_canal_parse /root/testdata/sf0.1 5
 set -e
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
